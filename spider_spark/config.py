@@ -76,8 +76,9 @@ class CrawlConfig:
     # ≈ 20 MB, built inside ONE task comfortably.  At 10^10 URLs that
     # is nb ≈ 2500 (≫ cores, so commit/filter writes stay parallel);
     # the default 32 suits the ≤10^8-key test/bench scale.  A frontier
-    # that outgrows its sizing migrates with engine.rebucket(new_nb)
-    # (one O(frontier) job, filters rebuilt, one atomic swap).
+    # that outgrows its sizing moves to a new count with
+    # engine.rebucket(new_nb) (one O(frontier) job, filters rebuilt,
+    # one atomic swap).
     frontier_buckets: int = 32
     # id/seq assignment parallelism: >1 → two-pass range-partitioned
     # sequence (per-partition counts → offsets → partition-local

@@ -35,15 +35,20 @@ per-round overhead, not data volume, dominated k≤1024 rounds): a round
 runs  (a) one select collect,  (b) one span-feed materialization, then
 (c) the tokenize materialization CONCURRENT with the admission jobs
 (canonicalize+probe, bucket-distinct collect, two-pass id assignment,
-one fused admissions+touched-buckets aggregation) on two driver
-threads,  (d) 3-way-parallel commit prep (frontier merge ∥ postings
-delta ∥ filter-update DAGs), and  (e) the concurrent commit writes —
-with commit outputs coalesced to one task when the working set is
-tiny.  Filter maintenance only engages past ``config.filter_min_keys``
-frontier rows.  (Round-4 N-vs-4N phase tables drove the overlap: the
-serialized admission+commit prelude was ~25s of core-count-independent
-wall per round; overlapped, every phase but the ~2s select collect
-scales 3.2-4.8x from 4→16 cores.)
+one fused per-bucket stats aggregation) on two driver threads, and
+(d) the frontier commit.
+
+bootstrap, enqueue and run_round all commit through ONE path,
+``_commit_frontier``: touched-bucket read → status/force merge → union
+with the admissions → one write layout (a single task when the working
+set is tiny, else one shuffle partition per touched bucket) → on the
+filter path only, a 3-way-parallel prelude (frontier merge ∥ postings
+delta ∥ filter-update DAGs) → the concurrent commit writes.  Filter
+maintenance only engages past ``config.filter_min_keys`` frontier rows
+and never at bootstrap.  (Round-4 N-vs-4N phase tables drove the
+overlap: the serialized admission+commit prelude was ~25s of
+core-count-independent wall per round; overlapped, every phase but the
+~2s select collect scales 3.2-4.8x from 4→16 cores.)
 
 Every source of nondeterminism is pinned (SURVEY §7.3): ids are
 admission sequence numbers, last_change is (round<<32)|seq in 64-bit
@@ -59,23 +64,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-import os
-import sys
-import time
-
 from .config import SEQ_SHIFT, CrawlConfig
 from .operators import admission, parse, postings, scheduling, seenfilter
 from .state.store import SnapshotStore
-
-_TIMING = os.environ.get("SPIDER_TIMING", "") == "1"
-
-
-def _tick(label: str, t0: float) -> float:
-    if _TIMING:
-        t = time.time()
-        print(f"## {label}: {t - t0:.2f}s", file=sys.stderr)
-        return t
-    return t0
 
 
 class CrawlEngine:
@@ -153,7 +144,6 @@ class CrawlEngine:
         nb: int,
         touched: list[int],
         new_bks: list[int],
-        migrate: bool,
         cuckoo_changes: DataFrame | None,
         cleanup: list,
         new_rows: DataFrame | None = None,
@@ -180,17 +170,15 @@ class CrawlEngine:
         if need_full:
             if barrier is not None:
                 barrier()
-            # one-time activation (or layout migration): the full URL
-            # set = this round's merged buckets ∪ the untouched buckets
+            # one-time activation: the full URL set = this commit's
+            # merged buckets ∪ the untouched buckets
             full_rows = frontier_final.select("url", "status")
-            if not migrate:
-                rest_ids = [bk for bk in self.store.populated_buckets("frontier")
-                            if bk not in set(touched)]
-                rest = (self.store.read_buckets(self.spark, "frontier", rest_ids)
-                        if rest_ids else None)
-                if rest is not None:
-                    full_rows = full_rows.unionByName(
-                        rest.select("url", "status"))
+            rest_ids = [bk for bk in self.store.populated_buckets("frontier")
+                        if bk not in set(touched)]
+            rest = (self.store.read_buckets(self.spark, "frontier", rest_ids)
+                    if rest_ids else None)
+            if rest is not None:
+                full_rows = full_rows.unionByName(rest.select("url", "status"))
 
         if fs["bloom_maintain"]:
             if bloom_df is None:
@@ -337,45 +325,16 @@ class CrawlEngine:
 
     def bootstrap(self, seed_urls: list[str], comment: str = "bookmark") -> None:
         """Admit the seed list as round 0 (Spider.java:605-608).  No-op
-        if the store already has a frontier (resume path)."""
+        if the store already has a frontier (resume path).  Commits the
+        frontier only: the seen-filter tables are first built by the
+        first enqueue or round past ``filter_min_keys``."""
         if self.store.exists("frontier"):
             return
-        cand = self.spark.createDataFrame(
-            [(-1, 0, i, u, comment, False) for i, u in enumerate(seed_urls)],
-            admission.CANDIDATE_SCHEMA,
-        )
-        # small seed lists: one partition + single-window id assignment
-        # (same k<=4096 shortcut as run_round) — a driver-local list
-        # parallelized to defaultParallelism otherwise drags 32 near-
-        # empty tasks through every admission stage.  repartition, NOT
-        # coalesce: a LocalTableScan feeding ArrowEvalPython directly
-        # pays a measured ~4 s/job pathology on this Spark build (UDS
-        # and TCP alike); the exchange breaks the adjacency and the
-        # admission canonicalize hop runs in ~0.3 s
-        small = len(seed_urls) <= 4096
-        if small:
-            cand = cand.repartition(1)
-        cleanup: list = []
-        new_rows, _ = admission.admit(
-            self.spark, cand, None, self.config, self.robots,
-            rnd=0, seq_start=0, next_id=0, cleanup=cleanup,
-            seq_partitions=1 if small else None,
-            with_force=False,
-        )
-        new_rows = new_rows.coalesce(1).cache()
-        n = new_rows.count()
-        nb = self.config.frontier_buckets
-        final = (
-            new_rows.withColumn("bucket", self._bucket_expr(nb))
-            .withColumn("_pstatus", F.col("status"))
-        )
-        self.store.commit_round(
-            0, rewrites={}, appends={},
-            bucket_updates={"frontier": (final, nb)},
-            metrics={"next_id": n, "fetched": 0, "admitted": n},
-        )
-        for df in (new_rows, *cleanup):
-            df.unpersist()
+        nb = self._n_buckets()
+        new_rows, _, cleanup = self._admit_urls(
+            seed_urls, comment, False, rnd=0, next_id=0, with_force=False)
+        self._commit_frontier(0, 0, nb, new_rows,
+                              self._bucket_stats(new_rows, None, nb), cleanup)
 
     # -- API: manual enqueue (A2) and edition force-requeue (A3/B5) -------
 
@@ -386,108 +345,198 @@ class CrawlEngine:
         pages from the cuckoo done-table (the deletions-on-retry path
         Bloom cannot express)."""
         cat = self.store.read_catalog()
+        self._check_layout()
         rnd = cat["round"]
         next_id = cat["lineage"][-1]["metrics"]["next_id"] if cat["lineage"] else 0
         nb = self._n_buckets()
-        b = self._bucket_expr(nb)
-        migrate = self.store.bucket_sub("frontier") != "_pstatus"
-        # same dedup sourcing as run_round: on the bucketed layout the
-        # confirm join reads ONLY the buckets holding maybe-seen rows
-        # (an enqueue batch touches a handful of buckets; the full
-        # multi-TB frontier never enters the join at 10^10 scale)
-        frontier = self.store.read(self.spark, "frontier") if migrate else None
-        reader = (None if migrate else
-                  (lambda bks: self.store.read_buckets(
-                      self.spark, "frontier", bks)))
         fs = self._filters_state(cat, next_id)
         bloom_df = (self.store.read(self.spark, "bloom")
                     if fs["has_bloom"] else None)
         done_df = (self.store.read(self.spark, "done")
                    if fs["has_done"] else None)
+        # the enqueue commit IS its own round (rnd+1), so its sequence
+        # space starts fresh — no overlap with crawl-round sequences.
+        # The confirm join reads ONLY the buckets holding maybe-seen
+        # rows (an enqueue batch touches a handful of buckets; the full
+        # multi-TB frontier never enters the join at 10^10 scale)
+        new_rows, forced, cleanup = self._admit_urls(
+            urls, comment, force, rnd=rnd + 1, next_id=next_id,
+            bloom_df=bloom_df, n_buckets=nb, done_df=done_df,
+            frontier_for_buckets=lambda bks: self.store.read_buckets(
+                self.spark, "frontier", bks),
+            with_force=True,
+        )
+        stats = self._bucket_stats(new_rows, forced, nb)
+        self._commit_frontier(rnd + 1, next_id, nb, new_rows, stats, cleanup,
+                              forced=forced, fs=fs, bloom_df=bloom_df,
+                              done_df=done_df)
+        return stats[0]
 
+    def _admit_urls(self, urls: list[str], comment: str, force: bool,
+                    **admit_kw) -> tuple[DataFrame, DataFrame | None, list]:
+        """Admit a Python list of URLs (seeds, enqueues); returns the
+        cached (new_rows, forced) and the caches to drop after commit."""
         cand = self.spark.createDataFrame(
             [(-1, 0, i, u, comment, force) for i, u in enumerate(urls)],
             admission.CANDIDATE_SCHEMA,
         )
-        # same small-list shortcut as bootstrap: one partition, single
-        # id-assignment window (ids are identical either way —
-        # tests/test_admission_plan.py); repartition for the same
-        # LocalTableScan→ArrowEvalPython reason as bootstrap
-        small_list = len(urls) <= 4096
-        if small_list:
+        # small lists: one partition + single-window id assignment (same
+        # k<=4096 shortcut as run_round; ids are identical either way —
+        # tests/test_admission_plan.py) — a driver-local list
+        # parallelized to defaultParallelism otherwise drags 32 near-
+        # empty tasks through every admission stage.  repartition, NOT
+        # coalesce: a LocalTableScan feeding ArrowEvalPython directly
+        # pays a measured ~4 s/job pathology on this Spark build (UDS
+        # and TCP alike); the exchange breaks the adjacency and the
+        # admission canonicalize hop runs in ~0.3 s
+        small = len(urls) <= 4096
+        if small:
             cand = cand.repartition(1)
-        # the enqueue commit IS its own round (rnd+1), so its sequence
-        # space starts fresh — no overlap with crawl-round sequences
         cleanup: list = []
         new_rows, forced = admission.admit(
-            self.spark, cand, frontier, self.config, self.robots,
-            rnd=rnd + 1, seq_start=0, next_id=next_id,
-            bloom_df=bloom_df, n_buckets=nb, done_df=done_df,
-            frontier_for_buckets=reader,
-            cleanup=cleanup, seq_partitions=1 if small_list else None,
-            with_force=True,
-        )
+            self.spark, cand, None, self.config, self.robots, seq_start=0,
+            cleanup=cleanup, seq_partitions=1 if small else None, **admit_kw)
         new_rows = new_rows.cache()
+        cleanup.append(new_rows)
         if forced is not None:
             forced = forced.cache()
+            cleanup.append(forced)
+        return new_rows, forced, cleanup
 
-        # one fused job: per-bucket admission counts + forced buckets
+    # -- the frontier commit (F5), shared by bootstrap/enqueue/run_round --
+
+    def _check_layout(self) -> None:
+        """The engine reads and writes only the status-partitioned
+        frontier (``bucket=N/_pstatus=STATUS``); any other layout would
+        read as an empty QUEUED set, so it fails loudly instead."""
+        sub = self.store.bucket_sub("frontier")
+        if sub != "_pstatus" and self.store.exists("frontier"):
+            raise ValueError(
+                f"unsupported frontier layout (sub-partition {sub!r}): the "
+                "engine reads and writes only the bucket=N/_pstatus=STATUS "
+                "layout")
+
+    def _bucket_stats(
+        self, new_rows: DataFrame, other: DataFrame | None, nb: int,
+    ) -> tuple[int, list[int], list[int]]:
+        """ONE fused job over a commit's change set: the admission
+        count, the buckets gaining new URLs, and every touched bucket —
+        those plus the buckets of ``other``'s rows (a round's selected
+        pages, an enqueue's force-requeues).  Returns
+        ``(n_new, touched, new_bks)``."""
+        b = self._bucket_expr(nb)
         sides = new_rows.select(b.alias("_b"), F.lit(1).alias("_n"))
-        if forced is not None:
+        if other is not None:
             sides = sides.unionByName(
-                forced.select(b.alias("_b"), F.lit(0).alias("_n")))
+                other.select(b.alias("_b"), F.lit(0).alias("_n")))
         stats = sides.groupBy("_b").agg(F.sum("_n").alias("_nn")).collect()
-        n_new = int(sum(r["_nn"] for r in stats))
-        touched = sorted(r["_b"] for r in stats)
-        new_bks = sorted(r["_b"] for r in stats if r["_nn"] > 0)
+        return (int(sum(r["_nn"] for r in stats)),
+                sorted(r["_b"] for r in stats),
+                sorted(r["_b"] for r in stats if r["_nn"] > 0))
 
-        if migrate:
-            base = frontier
-            touched = self.store.populated_buckets("frontier") or touched
-        else:
-            base = self.store.read_buckets(self.spark, "frontier", touched)
-        if base is None:
-            base = new_rows.limit(0)
-        updated = self._apply_updates(base, None, forced)
+    def _commit_frontier(
+        self,
+        rnd: int,
+        next_id: int,
+        nb: int,
+        new_rows: DataFrame,
+        stats: tuple[int, list[int], list[int]],
+        cleanup: list,
+        *,
+        updates: DataFrame | None = None,
+        forced: DataFrame | None = None,
+        k: int = 0,
+        appends: dict[str, DataFrame] | None = None,
+        fs: dict | None = None,
+        bloom_df: DataFrame | None = None,
+        done_df: DataFrame | None = None,
+    ) -> None:
+        """Commit round ``rnd`` in one atomic catalog swap: the frontier
+        MERGE, ``appends``, and — when ``fs`` (``_filters_state``) says
+        they are maintained — the seen-filter tables.  ``fs=None``
+        (bootstrap) maintains no filter.
+
+        Bucketed MERGE: only the ``stats`` buckets (``_bucket_stats``)
+        are re-read, folded with ``updates`` (a round's ``k`` fetched
+        pages) or ``forced`` (an enqueue's force-requeues), unioned
+        with ``new_rows`` and rewritten — untouched buckets stay
+        immutable.  Unpersists ``cleanup`` once committed."""
+        n_new, touched, new_bks = stats
+        appends = dict(appends or {})
+        base = self.store.read_buckets(self.spark, "frontier", touched)
+        merged = (new_rows if base is None else
+                  self._apply_updates(base, updates, forced)
+                  .unionByName(new_rows))
         frontier_final = (
-            updated.unionByName(new_rows)
-            .withColumn("bucket", b)
+            merged.withColumn("bucket", self._bucket_expr(nb))
             .withColumn("_pstatus", F.col("status"))
         )
-        small = (next_id + n_new) <= self.config.small_round_rows
-        if small:
+        # tiny working sets write in ONE task (a 32-way partitioned
+        # write of 15 rows cost ~8s in round 2); big commits spread one
+        # shuffle partition per touched bucket
+        if next_id + n_new + k <= self.config.small_round_rows:
             frontier_final = frontier_final.coalesce(1)
+            appends = {t: df.coalesce(1) for t, df in appends.items()}
         else:
-            nparts = nb if migrate else max(1, len(touched))
-            frontier_final = frontier_final.repartition(nparts, F.col("bucket"))
+            frontier_final = frontier_final.repartition(
+                max(1, len(touched)), F.col("bucket"))
 
         bucket_updates = {"frontier": (frontier_final, nb)}
-        if fs["bloom_maintain"] or fs["cuckoo_maintain"]:
+        if fs is not None and (fs["bloom_maintain"] or fs["cuckoo_maintain"]):
             frontier_final = frontier_final.cache()
             cleanup.append(frontier_final)
             bucket_updates["frontier"] = (frontier_final, nb)
+            # every fetched page leaves QUEUED (INDEXED/SUCCEEDED/FAILED
+            # are all "done") → adds; force-requeues → deletes
             cuckoo_changes = (
+                updates.select("url", F.lit("add").alias("op"))
+                if updates is not None else
                 forced.select("url", F.lit("del").alias("op"))
                 if forced is not None else None
             )
-            frontier_final.count()  # materialize before concurrent writers
-            bucket_updates.update(self._filter_updates(
-                fs, bloom_df, done_df, frontier_final, nb,
-                touched, new_bks, migrate, cuckoo_changes, cleanup,
-                new_rows=new_rows,
-            ))
+            # materialize the cached merge ONCE before anything fans
+            # out: the concurrent commit writers and the filter-update
+            # DAGs would otherwise race on the unmaterialized cache and
+            # EACH recompute the base-read + merge (observed as every
+            # writer taking the long pole's wall time).  A round's
+            # postings delta is independent of the frontier merge, so
+            # its (expensive: token groupBy) materialization runs on a
+            # second thread — the two DAGs' stage tails interleave and
+            # fill cores that a serial merge would leave idle (round-4
+            # N-vs-4N phase logs: commit scaled 2.2x of 4x because each
+            # sub-DAG alone under-fills 28 cores).  The filter-update
+            # DAGs (per-bucket Bloom OR-in + cuckoo adds/deletes, each
+            # ending in a tiny overflow-flag collect) consume only
+            # caches that are already materialized — they run on a
+            # THIRD thread, blocking on the frontier merge (via
+            # ``barrier``) only on the full-build and overflow-rebuild
+            # paths, so the commit's serial prelude is max(merge,
+            # postings, filters), not their sum
+            postings_delta = appends.get("postings")
+            if postings_delta is not None:
+                postings_delta = appends["postings"] = postings_delta.cache()
+                cleanup.append(postings_delta)
+            from concurrent.futures import ThreadPoolExecutor
+            with ThreadPoolExecutor(max_workers=3) as pool:
+                counts = [pool.submit(df.count)
+                          for df in (frontier_final, postings_delta)
+                          if df is not None]
+                filters = pool.submit(
+                    self._filter_updates, fs, bloom_df, done_df,
+                    frontier_final, nb, touched, new_bks, cuckoo_changes,
+                    cleanup, new_rows=new_rows, barrier=counts[0].result)
+                for fut in counts:
+                    fut.result()
+                bucket_updates.update(filters.result())
+
         self.store.commit_round(
-            rnd + 1, rewrites={}, appends={},
+            rnd, rewrites={}, appends=appends,
             bucket_updates=bucket_updates,
-            metrics={"next_id": next_id + n_new, "fetched": 0,
+            metrics={"next_id": next_id + n_new, "fetched": k,
                      "admitted": n_new},
         )
-        new_rows.unpersist()
         for df in cleanup:
             df.unpersist()
-        if forced is not None:
-            forced.unpersist()
-        return n_new
 
     # -- status merge helper (F2-F4) --------------------------------------
 
@@ -543,56 +592,44 @@ class CrawlEngine:
     # -- one crawl round ---------------------------------------------------
 
     def run_round(self) -> int:
-        _t = time.time()
         cat = self.store.read_catalog()
+        self._check_layout()
         rnd = cat["round"] + 1
         next_id = cat["lineage"][-1]["metrics"]["next_id"] if cat["lineage"] else 0
         cfg = self.config
         nb = self._n_buckets()
-        b = self._bucket_expr(nb)
 
-        # status-pruned QUEUED read; a legacy (un-sub-partitioned or
-        # single-dir) frontier is migrated by one full rewrite
-        migrate = self.store.bucket_sub("frontier") != "_pstatus"
-        frontier_full = None
-        if migrate:
-            frontier_full = self.store.read(self.spark, "frontier")
-            queued = (frontier_full.filter(F.col("status") == "QUEUED")
-                      if frontier_full is not None else None)
-        else:
-            queued = self.store.read_status(self.spark, "frontier", "QUEUED")
-        if queued is None:
-            self.store.commit_round(
-                rnd, rewrites={}, appends={},
-                metrics={"next_id": next_id, "fetched": 0, "admitted": 0},
-            )
-            return 0
-
-        budget = cfg.max_parallel(rnd % 24)
-        selected = scheduling.select_batch(
-            queued, self.hosts, cfg, budget
-        ).cache()
-        # fused select materialization: for driver-bounded budgets the
-        # url list doubles as the count AND the fetch IN-pushdown list.
-        # A large-budget round that SELECTED few urls (crawl tail)
-        # still earns the point-read pushdown — the extra collect is
-        # over the already-cached ≤1024-row selection (ADVICE r3)
-        url_list = None
-        if budget <= 1024:
-            url_list = [r.url for r in selected.select("url").collect()]
-            k = len(url_list)
-        else:
-            k = selected.count()
-            if k <= 1024:
+        # status-pruned QUEUED read: only _pstatus=QUEUED leaf files
+        queued = self.store.read_status(self.spark, "frontier", "QUEUED")
+        selected, k = None, 0
+        if queued is not None:
+            budget = cfg.max_parallel(rnd % 24)
+            selected = scheduling.select_batch(
+                queued, self.hosts, cfg, budget
+            ).cache()
+            # fused select materialization: for driver-bounded budgets
+            # the url list doubles as the count AND the fetch IN-pushdown
+            # list.  A large-budget round that SELECTED few urls (crawl
+            # tail) still earns the point-read pushdown — the extra
+            # collect is over the already-cached ≤1024-row selection
+            # (ADVICE r3)
+            url_list = None
+            if budget <= 1024:
                 url_list = [r.url for r in selected.select("url").collect()]
-        _t = _tick(f"select k={k}", _t)
+                k = len(url_list)
+            else:
+                k = selected.count()
+                if k <= 1024:
+                    url_list = [r.url for r in selected.select("url").collect()]
 
         if k == 0:
+            # nothing queued or nothing selectable: an empty round
             self.store.commit_round(
                 rnd, rewrites={}, appends={},
                 metrics={"next_id": next_id, "fetched": 0, "admitted": 0},
             )
-            selected.unpersist()
+            if selected is not None:
+                selected.unpersist()
             return 0
 
         # A4 fetch: broadcast the ≤K selected urls against the documents
@@ -616,9 +653,6 @@ class CrawlEngine:
         # (B6 MIME gate) outcomes are cheap filters over it
         flagged = parse.flag_docs(matched, cfg.safe_mime_types).cache()
         normal, redirects, unsafe = parse.split_flagged(flagged)
-        if _TIMING:
-            normal.count()
-            _t = _tick("fetch+cache", _t)
 
         # cache the exploded+repartitioned spans: BOTH the link-extraction
         # path (admission) and the tokenize path (postings) consume them,
@@ -628,7 +662,6 @@ class CrawlEngine:
         # consume it concurrently (tokenize and admission below).
         spans = parse.exploded_spans(normal).cache()
         spans.count()
-        _t = _tick("spans", _t)
         # cache the tokenized spans: both the doc metadata aggregate and
         # the postings build consume them — uncached, the Arrow tokenize
         # hop (the round's single biggest CPU cost) would run twice
@@ -673,14 +706,15 @@ class CrawlEngine:
         fs = self._filters_state(cat, next_id)
         bloom_df = (self.store.read(self.spark, "bloom")
                     if fs["has_bloom"] else None)
+        done_df = (self.store.read(self.spark, "done")
+                   if fs["has_done"] else None)
         reader = None
         frontier_arg = None
-        if bloom_df is not None and not migrate:
+        if bloom_df is not None:
             reader = lambda bks: self.store.read_buckets(
                 self.spark, "frontier", bks)
         else:
-            frontier_arg = (frontier_full if migrate
-                            else self.store.read(self.spark, "frontier"))
+            frontier_arg = self.store.read(self.spark, "frontier")
         cleanup: list = []
         # small rounds skip the two-pass machinery: its extra jobs
         # (range sample + stats collect) cost more than a one-partition
@@ -700,15 +734,12 @@ class CrawlEngine:
         # overlapped, its jobs fill the task slots the tokenize stages
         # leave idle and the phase disappears into the tokenize wall.
         def _parse_side():
-            t0 = time.time()
             # materialize the parse caches before the (concurrent) commit
             # writes — two writer threads racing on an unmaterialized
             # cache would each compute the tokenize hop
             meta.count()
-            _tick("meta(tokenize)", t0)
 
         def _admit_side():
-            t0 = time.time()
             rows, _ = admission.admit(
                 self.spark, candidates, frontier_arg, cfg, self.robots,
                 rnd=rnd, seq_start=k + 1, next_id=next_id,
@@ -716,19 +747,7 @@ class CrawlEngine:
                 cleanup=cleanup, seq_partitions=seq_parts, with_force=False,
             )
             rows = rows.cache()
-            # ONE fused job: admission count + per-bucket split + the full
-            # touched-bucket set (admissions ∪ status updates) — replaces
-            # round 2's three separate actions (new count, touched-buckets
-            # collect, bloom fold-in)
-            st = (
-                rows.select(b.alias("_b"), F.lit(1).alias("_n"))
-                .unionByName(
-                    selected.select(b.alias("_b"), F.lit(0).alias("_n")))
-                .groupBy("_b").agg(F.sum("_n").alias("_nn"))
-                .collect()
-            )
-            _tick(f"admission n={int(sum(r['_nn'] for r in st))}", t0)
-            return rows, st
+            return rows, self._bucket_stats(rows, selected, nb)
 
         from concurrent.futures import ThreadPoolExecutor
         with ThreadPoolExecutor(max_workers=2) as _pool:
@@ -736,104 +755,25 @@ class CrawlEngine:
             _admit_fut = _pool.submit(_admit_side)
             new_rows, stats = _admit_fut.result()
             _meta_fut.result()
-        _t = _tick("parse∥admit", _t)
-        n_new = int(sum(r["_nn"] for r in stats))
-        touched = sorted(r["_b"] for r in stats)
-        new_bks = sorted(r["_b"] for r in stats if r["_nn"] > 0)
+        cleanup.append(new_rows)
+        n_new = stats[0]
         if k + 1 + n_new >= (1 << SEQ_SHIFT):
             raise OverflowError(
                 f"round {rnd} sequence space overflow: {k + 1 + n_new} "
                 f">= 2^{SEQ_SHIFT}; widen config.SEQ_SHIFT"
             )
 
-        # bucketed frontier MERGE: only buckets holding this round's
-        # status updates (⊆ selected) or new admissions are re-read,
-        # merged, and rewritten — untouched buckets stay immutable
-        if migrate:
-            base = frontier_full
-            touched = self.store.populated_buckets("frontier") or touched
-        else:
-            base = self.store.read_buckets(self.spark, "frontier", touched)
-        if base is None:
-            base = new_rows.limit(0)
-        updated = self._apply_updates(base, updates, None)
-        frontier_final = (
-            updated.unionByName(new_rows)
-            .withColumn("bucket", b)
-            .withColumn("_pstatus", F.col("status"))
-        )
-        # tiny working sets write in ONE task (a 32-way partitioned
-        # write of 15 rows cost ~8s in round 2); big rounds spread one
-        # shuffle partition per touched bucket
-        small = (next_id + k + n_new) <= cfg.small_round_rows
-        if small:
-            frontier_final = frontier_final.coalesce(1)
-        else:
-            nparts = nb if migrate else max(1, len(touched))
-            frontier_final = frontier_final.repartition(nparts, F.col("bucket"))
-
         crawl_log = selected.select(
             F.lit(rnd).alias("round"), "rank", "url"
         )
-        if small:
-            postings_delta = postings_delta.coalesce(1)
-            crawl_log = crawl_log.coalesce(1)
-
-        bucket_updates = {"frontier": (frontier_final, nb)}
-        if fs["bloom_maintain"] or fs["cuckoo_maintain"]:
-            frontier_final = frontier_final.cache()
-            cleanup.append(frontier_final)
-            bucket_updates["frontier"] = (frontier_final, nb)
-            done_df = (self.store.read(self.spark, "done")
-                       if fs["has_done"] else None)
-            # every fetched page leaves QUEUED (INDEXED/SUCCEEDED/FAILED
-            # are all "done") → adds; crawl rounds never force-requeue,
-            # so deletes only come from enqueue()
-            cuckoo_changes = updates.select("url", F.lit("add").alias("op"))
-            # materialize the cached merge ONCE before anything fans
-            # out: the concurrent commit writers and the filter-update
-            # DAGs would otherwise race on the unmaterialized cache and
-            # EACH recompute the base-read + merge (observed as every
-            # writer taking the long pole's wall time).  The postings
-            # delta is independent of the frontier merge, so its
-            # (expensive: token groupBy) materialization runs on a
-            # second thread — the two DAGs' stage tails interleave and
-            # fill cores that a serial merge would leave idle (round-4
-            # N-vs-4N phase logs: commit scaled 2.2x of 4x because each
-            # sub-DAG alone under-fills 28 cores).  The filter-update
-            # DAGs (per-bucket Bloom OR-in + cuckoo adds, each ending in
-            # a tiny overflow-flag collect) consume only caches that are
-            # already materialized (new_rows, selected, meta) — they run
-            # on a THIRD thread, blocking on the frontier merge (via
-            # ``barrier``) only on the rare overflow-rebuild path, so
-            # the commit's serial prelude is max(merge, postings,
-            # filters), not their sum
-            postings_delta = postings_delta.cache()
-            cleanup.append(postings_delta)
-            from concurrent.futures import ThreadPoolExecutor
-            with ThreadPoolExecutor(max_workers=3) as _pool:
-                _f = _pool.submit(frontier_final.count)
-                _p = _pool.submit(postings_delta.count)
-                _u = _pool.submit(
-                    self._filter_updates, fs, bloom_df, done_df,
-                    frontier_final, nb, touched, new_bks, migrate,
-                    cuckoo_changes, cleanup, new_rows=new_rows,
-                    barrier=_f.result)
-                _f.result(), _p.result()
-                bucket_updates.update(_u.result())
-
-        self.store.commit_round(
-            rnd,
-            rewrites={},
+        self._commit_frontier(
+            rnd, next_id, nb, new_rows, stats, cleanup,
+            updates=updates, k=k,
             appends={"postings": postings_delta, "crawl_log": crawl_log},
-            bucket_updates=bucket_updates,
-            metrics={"next_id": next_id + n_new, "fetched": k,
-                     "admitted": n_new},
+            fs=fs, bloom_df=bloom_df, done_df=done_df,
         )
-        _t = _tick("commit", _t)
         self._maybe_compact()
-        for df in (selected, flagged, spans, tok, meta,
-                   new_rows, *cleanup):
+        for df in (selected, flagged, spans, tok, meta):
             df.unpersist()
         return k
 

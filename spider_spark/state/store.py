@@ -464,7 +464,6 @@ class SnapshotStore:
 
         def _write(job):
             _, rel, df, kind = job
-            t0 = time.time()
             w = df.write.mode("overwrite")
             if kind == "bucket":
                 cols = ["bucket"]
@@ -472,11 +471,8 @@ class SnapshotStore:
                     cols.append("_pstatus")
                 w = w.partitionBy(*cols)
             w.parquet(os.path.join(self.root, rel))
-            if os.environ.get("SPIDER_TIMING", "") == "1":
-                import sys
-                print(f"## write {rel}: {time.time()-t0:.2f}s", file=sys.stderr)
 
-        if len(jobs) > 1 and os.environ.get("SPIDER_SERIAL_COMMIT", "") != "1":
+        if len(jobs) > 1:
             from concurrent.futures import ThreadPoolExecutor
             with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
                 list(pool.map(_write, jobs))

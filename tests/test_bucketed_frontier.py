@@ -10,9 +10,11 @@ tracks the round's update volume, not frontier size.
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from spider_spark.engine import CrawlEngine
+from spider_spark.operators import admission, seenfilter
 from spider_spark.state.store import SnapshotStore
 
 
@@ -160,3 +162,37 @@ def test_lookup_url_point_read(spark, corpus_dir, corpus, crawl_config,
     assert eng.lookup_url(rows[0]["url"] + "/nonexistent").count() == 0
     # a URL that does not canonicalize
     assert eng.lookup_url("not a url ::") is None
+
+
+def test_unsupported_frontier_layout_raises(spark, corpus_dir, crawl_config,
+                                            tmp_path):
+    """A bucketed frontier without the ``_pstatus`` sub-partition is not
+    a layout the engine writes.  Its status-pruned QUEUED read would be
+    empty, so a round would silently commit nothing: run_round and
+    enqueue must refuse it by name and commit nothing."""
+    root = str(tmp_path / "nopstatus")
+    store = SnapshotStore(root)
+    nb = crawl_config.frontier_buckets
+    rows = spark.createDataFrame(
+        [(0, "http://a.example/x", 1, "a.example", "QUEUED", 0, None, 0,
+          None, "seed")],
+        "id long, url string, url_hash long, host string, status string, "
+        "priority int, edition long, last_change long, title string, "
+        "comment string",
+    ).select(*admission.FRONTIER_COLUMNS)
+    store.commit_round(
+        0, rewrites={}, appends={},
+        bucket_updates={"frontier": (
+            rows.withColumn("bucket", seenfilter.bucket_of(F.col("url"), nb)),
+            nb)},
+        metrics={"next_id": 1, "fetched": 0, "admitted": 1},
+    )
+    assert store.is_bucketed("frontier")
+    assert store.bucket_sub("frontier") is None
+
+    eng = _mk_engine(spark, corpus_dir, crawl_config, root)
+    with pytest.raises(ValueError, match="frontier layout"):
+        eng.run_round()
+    with pytest.raises(ValueError, match="frontier layout"):
+        eng.enqueue(["http://b.example/y"])
+    assert store.current_round == 0

@@ -74,14 +74,34 @@ def test_filter_path_matches_plain_path(spark, corpus_dir, corpus,
                                         tmp_path):
     """Force the sharded-filter machinery on a tiny corpus: frontier,
     crawl log and postings must be identical to the plain anti-join
-    engine, and the filter tables must exist + commit atomically."""
+    engine, and the filter tables must exist + commit atomically.  A
+    third engine also forces every commit onto the bucket-partitioned
+    write (``small_round_rows=0``)."""
+    import dataclasses
     plain = _mk_engine(spark, corpus_dir, crawl_config, str(tmp_path / "a"))
     plain.bootstrap(corpus["seeds"])
     plain.run(3)
 
     filt = _mk_engine(spark, corpus_dir, filter_config, str(tmp_path / "b"))
-    filt.bootstrap(corpus["seeds"])
-    filt.run(3)
+    part = _mk_engine(spark, corpus_dir,
+                      dataclasses.replace(filter_config, small_round_rows=0),
+                      str(tmp_path / "p"))
+    for eng in (filt, part):
+        eng.bootstrap(corpus["seeds"])
+        # bootstrap maintains no filter, even at filter_min_keys=0 ...
+        buckets = eng.store.read_catalog()["buckets"]
+        assert "bloom" not in buckets and "done" not in buckets
+        eng.run(1)
+        # ... the first round past the threshold builds both
+        assert eng.store.is_bucketed("bloom")
+        assert eng.store.is_bucketed("done")
+        eng.run(2)
+
+    # the partitioned engine really wrote its round in several tasks
+    fdir = os.path.join(part.store.root, "frontier/snap-000001")
+    tasks = {f.split("-")[1] for _, _, fs in os.walk(fdir) for f in fs
+             if f.startswith("part-") and f.endswith(".parquet")}
+    assert len(tasks) > 1
 
     def sig(eng):
         fr = sorted(map(tuple, eng.frontier().toPandas().fillna(-1)
@@ -89,9 +109,7 @@ def test_filter_path_matches_plain_path(spark, corpus_dir, corpus,
         log = sorted(map(tuple, eng.crawl_log().toPandas().values.tolist()))
         return fr, log
 
-    assert sig(plain) == sig(filt)
-    assert filt.store.is_bucketed("bloom")
-    assert filt.store.is_bucketed("done")
+    assert sig(plain) == sig(filt) == sig(part)
     # bloom rows cover exactly the populated frontier buckets
     nb = filter_config.frontier_buckets
     fr_bks = {r["b"] for r in filt.frontier().select(
@@ -115,12 +133,19 @@ def test_bloom_probe_no_false_negatives_via_table(spark, corpus_dir, corpus,
     assert probed.filter(~F.col("_maybe")).count() == 0
 
 
+@pytest.mark.parametrize("small_round_rows", [20_000, 0],
+                         ids=["one_task", "partitioned"])
 def test_cuckoo_delete_then_readmit(spark, corpus_dir, corpus,
-                                    filter_config, tmp_path):
+                                    filter_config, small_round_rows,
+                                    tmp_path):
     """Force-requeue of a fetched page must DELETE it from the done
     table (the Bloom-impossible path), and the requeued page must be
-    fetchable again."""
-    eng = _mk_engine(spark, corpus_dir, filter_config, str(tmp_path / "d"))
+    fetchable again — with every commit written in one task, and with
+    every commit (the forced-requeue enqueue included) written
+    bucket-partitioned."""
+    import dataclasses
+    cfg = dataclasses.replace(filter_config, small_round_rows=small_round_rows)
+    eng = _mk_engine(spark, corpus_dir, cfg, str(tmp_path / "d"))
     eng.bootstrap(corpus["seeds"])
     eng.run(2)
     nb = filter_config.frontier_buckets
