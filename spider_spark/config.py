@@ -8,7 +8,7 @@ All time-dependent behavior is driven by an injected ``round_hour``
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 # last_change = (round << SEQ_SHIFT) | seq, computed in 64-bit: 32 bits
 # of per-round sequence leaves 31 bits of round — a round admitting
@@ -46,9 +46,6 @@ class CrawlConfig:
     begin_working_period: int = 23   # db/Config.java:45
     end_working_period: int = 7      # db/Config.java:46
     max_shown_uris: int = 50         # db/Config.java:41
-    index_title: str = "Spider index"
-    index_owner: str = "Freenet"
-    index_owner_email: str = "(nil)"
     # Request priority classes (db/Config.java:194-201 RequestStarter
     # ladder, 0=MAXIMUM .. 6=MINIMUM; the reference schedules editioned
     # USK refetches ahead of normal pages).  The frontier's priority
@@ -61,30 +58,24 @@ class CrawlConfig:
     # NOT parsed/indexed — no postings, no outlinks, no title.  Pages
     # with no declared type (no 'mime' span) are treated as safe text.
     safe_mime_types: tuple[str, ...] = ("text/html", "text/plain")
-    # newFormatIndexBufferLimit analog: postings rows per snapshot commit.
-    # Under batch rounds every round commits its delta, so this only caps
-    # an optional mid-round split (db/Config.java:62 ≈ 4 MB).
-    buffer_limit_mb: int = 4
 
     # --- graft knobs (SURVEY.md §0.1 axes A+B) ---
     default_host_quota: int = 8      # per-host max fetches per round (politeness)
-    num_salts: int = 4               # sub-partitions for hot-host ranking skew
     # bucket(url_hash) partition count.  SIZING RULE (VERDICT r3 #4):
     # pick nb = ceil(expected_frontier_keys / target_keys_per_bucket)
     # at bootstrap, targeting ~4M keys/bucket — each bucket's Bloom
-    # bitmap is then keys·bits_per_key·4x-headroom ≈ 4M·10·4 bits
-    # ≈ 20 MB, built inside ONE task comfortably.  At 10^10 URLs that
-    # is nb ≈ 2500 (≫ cores, so commit/filter writes stay parallel);
-    # the default 32 suits the ≤10^8-key test/bench scale.  A frontier
-    # that outgrows its sizing moves to a new count with
-    # engine.rebucket(new_nb) (one O(frontier) job, filters rebuilt,
-    # one atomic swap).
+    # bitmap is then keys·functions.filters.BITS_PER_KEY·4x-headroom
+    # ≈ 4M·10·4 bits ≈ 20 MB, built inside ONE task comfortably.  At
+    # 10^10 URLs that is nb ≈ 2500 (≫ cores, so commit/filter writes
+    # stay parallel); the default 32 suits the ≤10^8-key test/bench
+    # scale.  A frontier that outgrows its sizing moves to a new count
+    # with engine.rebucket(new_nb) (one O(frontier) job, filters
+    # rebuilt, one atomic swap).
     frontier_buckets: int = 32
     # id/seq assignment parallelism: >1 → two-pass range-partitioned
     # sequence (per-partition counts → offsets → partition-local
     # row_number); 1 → single global window (tiny rounds only)
     seq_partitions: int = 8
-    bloom_bits_per_key: int = 10
     # the sharded Bloom/cuckoo prefilters only pay for themselves once
     # the frontier outgrows what the exact anti-join handles trivially;
     # below this row count the engine runs no filter jobs at all

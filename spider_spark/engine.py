@@ -78,7 +78,6 @@ class CrawlEngine:
         config: CrawlConfig | None = None,
         robots: DataFrame | None = None,
         hosts: DataFrame | None = None,
-        use_bloom: bool = True,
     ):
         self.spark = spark
         self.store = store
@@ -86,7 +85,6 @@ class CrawlEngine:
         self.config = config or CrawlConfig()
         self.robots = robots
         self.hosts = hosts
-        self.use_bloom = use_bloom
         # one retention policy: archived as_of catalogs pin their dirs
         # through gc, so the store's snapshot window must equal the
         # engine's gc grace window or expiry could never reclaim space
@@ -131,7 +129,7 @@ class CrawlEngine:
         return {
             "has_bloom": has_bloom,
             "has_done": has_done,
-            "bloom_maintain": has_bloom or (self.use_bloom and scale),
+            "bloom_maintain": has_bloom or scale,
             "cuckoo_maintain": has_done or (self.config.use_cuckoo and scale),
         }
 
@@ -159,7 +157,6 @@ class CrawlEngine:
         so this method can run on a side thread concurrent with that
         materialization without racing on the unmaterialized cache.
         The common incremental path (no overflow) never blocks on it."""
-        cfg = self.config
         b = self._bucket_expr(nb)
         out: dict[str, tuple[DataFrame, int]] = {}
         need_full = (
@@ -183,8 +180,7 @@ class CrawlEngine:
         if fs["bloom_maintain"]:
             if bloom_df is None:
                 out["bloom"] = (
-                    seenfilter.build_bucket_blooms(
-                        full_rows.select("url"), nb, cfg.bloom_bits_per_key)
+                    seenfilter.build_bucket_blooms(full_rows.select("url"), nb)
                     .withColumn("bucket", F.col("bkt")),
                     nb,
                 )
@@ -194,8 +190,7 @@ class CrawlEngine:
                 # over its sized capacity rebuilds from its merged
                 # frontier rows (rare; one tiny flag collect)
                 upd = seenfilter.update_bucket_blooms(
-                    new_rows.select("url"), bloom_df, nb,
-                    cfg.bloom_bits_per_key).cache()
+                    new_rows.select("url"), bloom_df, nb).cache()
                 cleanup.append(upd)
                 over = [r["bkt"] for r in
                         upd.filter("overflow").select("bkt").collect()]
@@ -203,8 +198,7 @@ class CrawlEngine:
                     if barrier is not None:
                         barrier()
                     rebuilt = seenfilter.build_bucket_blooms(
-                        frontier_final.filter(b.isin(over)).select("url"),
-                        nb, cfg.bloom_bits_per_key)
+                        frontier_final.filter(b.isin(over)).select("url"), nb)
                     upd = upd.filter(~F.col("bkt").isin(over)) \
                              .unionByName(rebuilt)
                 out["bloom"] = (upd.withColumn("bucket", F.col("bkt")), nb)
@@ -298,9 +292,7 @@ class CrawlEngine:
         # frontier rather than carrying anything over
         if fs["has_bloom"]:
             bucket_updates["bloom"] = (
-                seenfilter.build_bucket_blooms(
-                    final.select("url"), new_nb,
-                    self.config.bloom_bits_per_key)
+                seenfilter.build_bucket_blooms(final.select("url"), new_nb)
                 .withColumn("bucket", F.col("bkt")),
                 new_nb,
             )
@@ -332,7 +324,7 @@ class CrawlEngine:
             return
         nb = self._n_buckets()
         new_rows, _, cleanup = self._admit_urls(
-            seed_urls, comment, False, rnd=0, next_id=0, with_force=False)
+            seed_urls, comment, False, rnd=0, next_id=0)
         self._commit_frontier(0, 0, nb, new_rows,
                               self._bucket_stats(new_rows, None, nb), cleanup)
 
@@ -343,7 +335,8 @@ class CrawlEngine:
         """Out-of-band admission (web/MainPage.java:53-70 analog).  Runs
         as its own mini-round commit.  Force-requeues DELETE the moved
         pages from the cuckoo done-table (the deletions-on-retry path
-        Bloom cannot express)."""
+        Bloom cannot express); a ``force=False`` enqueue only admits new
+        URLs and leaves the done-table untouched."""
         cat = self.store.read_catalog()
         self._check_layout()
         rnd = cat["round"]
@@ -364,7 +357,6 @@ class CrawlEngine:
             bloom_df=bloom_df, n_buckets=nb, done_df=done_df,
             frontier_for_buckets=lambda bks: self.store.read_buckets(
                 self.spark, "frontier", bks),
-            with_force=True,
         )
         stats = self._bucket_stats(new_rows, forced, nb)
         self._commit_frontier(rnd + 1, next_id, nb, new_rows, stats, cleanup,
@@ -375,7 +367,9 @@ class CrawlEngine:
     def _admit_urls(self, urls: list[str], comment: str, force: bool,
                     **admit_kw) -> tuple[DataFrame, DataFrame | None, list]:
         """Admit a Python list of URLs (seeds, enqueues); returns the
-        cached (new_rows, forced) and the caches to drop after commit."""
+        cached (new_rows, forced) and the caches to drop after commit.
+        Only a ``force`` list runs the force-requeue join (``forced``
+        is None otherwise)."""
         cand = self.spark.createDataFrame(
             [(-1, 0, i, u, comment, force) for i, u in enumerate(urls)],
             admission.CANDIDATE_SCHEMA,
@@ -395,7 +389,8 @@ class CrawlEngine:
         cleanup: list = []
         new_rows, forced = admission.admit(
             self.spark, cand, None, self.config, self.robots, seq_start=0,
-            cleanup=cleanup, seq_partitions=1 if small else None, **admit_kw)
+            cleanup=cleanup, seq_partitions=1 if small else None,
+            with_force=force, **admit_kw)
         new_rows = new_rows.cache()
         cleanup.append(new_rows)
         if forced is not None:
@@ -846,7 +841,7 @@ class CrawlEngine:
         return self.store.read_changes(self.spark, "postings",
                                        since=since_round)
 
-    def status_counts(self, include_not_pushed: bool = True) -> DataFrame:
+    def status_counts(self) -> DataFrame:
         """UI status summary (web/MainPage.java:122-131 analog).
 
         NOT_PUSHED fidelity (db/Status.java:7-11): pages fetched by a
@@ -860,7 +855,7 @@ class CrawlEngine:
         if fr is None:  # fresh/empty store: empty counts, not a crash
             return self.spark.createDataFrame([], "status string, n long")
         counts = scheduling.status_counts(fr)
-        pending = self.store.pending_round() if include_not_pushed else None
+        pending = self.store.pending_round()
         if not pending:
             return counts
         # the torn round's fetch count is already in the marker metrics

@@ -129,7 +129,6 @@ def run_flagship(
     budget: int = 64,
     host_quota: int = 16,
     workdir: str | None = None,
-    use_bloom: bool = True,
     n_seed_hosts: int = 5,
     seeds_per_host: int = 1,
 ) -> tuple[CrawlEngine, DataFrame]:
@@ -148,9 +147,7 @@ def run_flagship(
         default_host_quota=host_quota,
     )
     eng = CrawlEngine(
-        spark, SnapshotStore(os.path.join(workdir, "state")),
-        corpus_path, cfg, use_bloom=use_bloom,
-    )
+        spark, SnapshotStore(os.path.join(workdir, "state")), corpus_path, cfg)
     with ThreadPoolExecutor(max_workers=1) as pool:
         corpus_fut = pool.submit(derive_corpus, spark, sf_dir, corpus_path)
         eng.bootstrap(seed_urls(spark, sf_dir, n_hosts=n_seed_hosts,

@@ -12,54 +12,34 @@ corrupt the seen set (SURVEY.md §7.3).  The filter state is a plain
 numpy array — cheap to broadcast to executors and probe inside an
 Arrow-batched pandas UDF.
 
-Hashing: the ENGINE path computes the two 64-bit hashes JVM-side
-(``xxhash64(url)`` / ``xxhash64(url, 1)``) and feeds them to the
-numpy-vectorized array APIs — Bloom ``add_hash_arrays`` /
-``contains_hash_arrays`` and cuckoo ``fp_buckets_arrays`` /
-``add_fp`` / ``contains_arrays`` — so the only per-key Python left is
-the cuckoo kick loop, which is inherently sequential.  The per-string
-BLAKE2b API remains for standalone use; both families are fully
-deterministic across processes (unlike Python's salted ``hash()``),
-which the bit-identical-resume requirement needs.  Build and probe must
-use the SAME API family (the two hash different bit positions).
+Hashing: keys arrive as two 64-bit hashes computed JVM-side
+(``xxhash64(url)`` / ``xxhash64(url, 1)``), and both filters work on
+whole numpy arrays of them — Bloom ``add_hash_arrays`` /
+``contains_hash_arrays``, cuckoo ``fp_buckets_arrays`` / ``add_fp`` /
+``delete_fp`` / ``contains_arrays`` — so the only per-key Python left
+is the cuckoo kick loop, which is inherently sequential.  The hashes
+are deterministic across processes (unlike Python's salted ``hash()``),
+which the bit-identical-resume requirement needs.
 """
 
 from __future__ import annotations
 
-import hashlib
-
 import numpy as np
-import pandas as pd
 
-
-def _hash128(key: str) -> tuple[int, int]:
-    d = hashlib.blake2b(key.encode("utf-8"), digest_size=16).digest()
-    return (
-        int.from_bytes(d[:8], "little"),
-        int.from_bytes(d[8:], "little") | 1,  # odd → good stride
-    )
+# Bloom sizing: bits per key at the sized capacity (~1% FPR with
+# k = 7).  Filter rows store their own m and k, so only a build or an
+# overflow check reads this.
+BITS_PER_KEY = 10
 
 
 class BloomFilter:
-    """Classic Bloom filter over strings (Kirsch–Mitzenmacher double
-    hashing).  Serializable as (bits, num_hashes) for broadcast."""
+    """Classic Bloom filter over 64-bit hash pairs (Kirsch–Mitzenmacher
+    double hashing).  Serializable as (bits, num_hashes) for broadcast."""
 
-    def __init__(self, capacity: int, bits_per_key: int = 10):
-        self.m = max(64, capacity * bits_per_key)
-        self.k = max(1, int(round(bits_per_key * 0.6931)))
+    def __init__(self, capacity: int):
+        self.m = max(64, capacity * BITS_PER_KEY)
+        self.k = max(1, int(round(BITS_PER_KEY * 0.6931)))
         self.bits = np.zeros((self.m + 63) // 64, dtype=np.uint64)
-
-    def add(self, key: str) -> None:
-        h1, h2 = _hash128(key)
-        for i in range(self.k):
-            pos = (h1 + i * h2) % self.m
-            self.bits[pos >> 6] |= np.uint64(1 << (pos & 63))
-
-    def add_many(self, keys) -> None:
-        for key in keys:
-            self.add(key)
-
-    # -- vectorized hash-pair API (the engine hot path) --------------------
 
     def add_hash_arrays(self, h1: np.ndarray, h2: np.ndarray) -> None:
         """Set bits for a batch of pre-hashed keys.  h1/h2 are uint64
@@ -92,30 +72,6 @@ class BloomFilter:
             ok &= (word >> (pos & np.uint64(63))) & np.uint64(1) != 0
         return ok
 
-    def __contains__(self, key: str) -> bool:
-        h1, h2 = _hash128(key)
-        for i in range(self.k):
-            pos = (h1 + i * h2) % self.m
-            if not (int(self.bits[pos >> 6]) >> (pos & 63)) & 1:
-                return False
-        return True
-
-    def contains_series(self, keys: pd.Series) -> pd.Series:
-        """Arrow-batch probe: Series[str] -> Series[bool]."""
-        bits, m, k = self.bits, self.m, self.k
-
-        def probe(key):
-            if key is None:
-                return False
-            h1, h2 = _hash128(key)
-            for i in range(k):
-                pos = (h1 + i * h2) % m
-                if not (int(bits[pos >> 6]) >> (pos & 63)) & 1:
-                    return False
-            return True
-
-        return keys.map(probe)
-
 
 class CuckooFilter:
     """Cuckoo filter (Fan et al., CoNEXT'14 — public algorithm):
@@ -135,22 +91,6 @@ class CuckooFilter:
         # deterministic "random" eviction slot counter
         self._kick_seq = 0
 
-    def _fp_and_buckets(self, key: str) -> tuple[int, int, int]:
-        h1, h2 = _hash128(key)
-        fp = (h1 & 0xFFFF) or 1  # fingerprint 0 means empty slot
-        i1 = h2 % self.num_buckets
-        i2 = (i1 ^ self._fp_hash(fp)) % self.num_buckets
-        return fp, i1, i2
-
-    # -- vectorized hash-pair API (the engine hot path) --------------------
-    #
-    # Same partial-key scheme, but fingerprints/bucket indices derive
-    # from JVM-side xxhash64 pairs computed as Columns (like the Bloom
-    # path) and come back as whole numpy arrays — the per-key Python
-    # cost drops to just the cuckoo kick loop, which is inherently
-    # sequential.  The two hash families place keys at different slots,
-    # so a filter must be built and probed by the SAME family.
-
     @staticmethod
     def fp_buckets_arrays(h1: np.ndarray, h2: np.ndarray, nb: int):
         """(h1, h2) uint64 arrays → (fp, i1, i2) int64 arrays."""
@@ -168,8 +108,8 @@ class CuckooFilter:
         return fp, i1, i2
 
     def add_fp(self, fp: int, i1: int, i2: int) -> bool:
-        """Insert a precomputed (fingerprint, bucket, alt-bucket) key —
-        the kick loop of ``add`` without the hashing."""
+        """Insert a precomputed (fingerprint, bucket, alt-bucket) key.
+        False = table full — the caller rebuilds larger."""
         if self._try_put(i1, fp) or self._try_put(i2, fp):
             return True
         i = i1 if (self._kick_seq & 1) == 0 else i2
@@ -214,17 +154,3 @@ class CuckooFilter:
                 row[s] = fp
                 return True
         return False
-
-    def add(self, key: str) -> bool:
-        # False = table full — caller should rebuild larger
-        return self.add_fp(*self._fp_and_buckets(key))
-
-    def __contains__(self, key: str) -> bool:
-        fp, i1, i2 = self._fp_and_buckets(key)
-        return fp in self.table[i1] or fp in self.table[i2]
-
-    def delete(self, key: str) -> bool:
-        return self.delete_fp(*self._fp_and_buckets(key))
-
-    def contains_series(self, keys: pd.Series) -> pd.Series:
-        return keys.map(lambda k: k is not None and k in self)

@@ -11,8 +11,6 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
-
 _URL_RE = re.compile(r"https?://[^\s]+", re.IGNORECASE)
 _TRAIL = ".,!?;:)\"'"
 
@@ -41,10 +39,6 @@ def extract_urls(text: str) -> list[str]:
         if u:
             out.append(u)
     return out
-
-
-def extract_urls_series(texts: pd.Series) -> pd.Series:
-    return texts.map(lambda t: extract_urls(t) if t else [])
 
 
 def extract_urls_col(col):

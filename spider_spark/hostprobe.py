@@ -23,59 +23,6 @@ def _burn(q):
     q.put(x)
 
 
-def _pingpong(conn, n_ops, out):
-    t_end = time.time() + 3
-    ops = 0
-    b = b"x" * 64
-    while time.time() < t_end:
-        conn.send_bytes(b)
-        conn.recv_bytes()
-        ops += 1
-    out.put(ops)
-
-
-def _echo(conn):
-    try:
-        while True:
-            conn.send_bytes(conn.recv_bytes())
-    except (EOFError, OSError):
-        pass
-
-
-def syscall_probe(npairs: int = 4) -> float:
-    """Round-trips/sec/pair over npairs of socketpair ping-pong
-    processes (3s window) — the detector for this guest's OTHER
-    interference mode: invisible steal.  The hypervisor preempting
-    vCPUs on the syscall/wakeup path shows up as guest SYS time with
-    the steal counter at 0 (pure-CPU spins keep their cores, so
-    steal_probe reads clean while IPC-heavy Spark work runs 10-50x
-    slow).  Calibrated on this box: clean windows measure ~18-25k
-    rt/s/pair (virtio syscall overhead — a fixed Arrow-UDF reference
-    job runs at full speed at 18.5k), stalled windows ~3-13k.  -1.0
-    if the probe cannot run."""
-    try:
-        kids = []
-        outs = mp.Queue()
-        for _ in range(npairs):
-            a, b = mp.Pipe()
-            pe = mp.Process(target=_echo, args=(b,), daemon=True)
-            pp = mp.Process(target=_pingpong, args=(a, 0, outs), daemon=True)
-            pe.start()
-            pp.start()
-            kids.append((pe, pp, a, b))
-        total = 0
-        for _ in range(npairs):
-            total += outs.get(timeout=30)
-        for pe, pp, a, b in kids:
-            pp.join(timeout=5)
-            pe.terminate()
-            a.close()
-            b.close()
-        return round(total / 3.0 / npairs, 1)
-    except Exception:
-        return -1.0
-
-
 def _alu_spin(cpu, seconds, out):
     try:
         import os

@@ -62,10 +62,6 @@ FRONTIER_COLUMNS = [
 ]
 
 
-def empty_candidates(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], CANDIDATE_SCHEMA)
-
-
 def filter_and_canonicalize(
     candidates: DataFrame,
     config: CrawlConfig,
@@ -136,8 +132,8 @@ def admit(
       * the exact confirm join runs against ``frontier`` OR, when
         ``frontier_for_buckets`` is given, against only the buckets
         that hold maybe-seen rows (one tiny distinct-buckets job)
-    ``with_force=False`` (crawl rounds: outlinks never carry force)
-    skips the force-requeue machinery — its hit-join and union would
+    ``with_force=False`` (crawl rounds and plain enqueues: no
+    candidate carries force) skips the force-requeue machinery — its hit-join and union would
     otherwise run per round just to produce zero rows.  ``done_df``
     (per-bucket cuckoo of non-QUEUED pages) prefilters which forced
     candidates need the exact status-confirm join.

@@ -97,13 +97,13 @@ def encode_entry(term: str, doc_id: str, rel: float, title: str | None,
     return out.getvalue()
 
 
-def metadata_header(index_title: str, index_owner: str, owner_email: str,
+def metadata_header(title: str, owner_name: str, owner_email: str,
                     total_pages: int) -> bytes:
     """SimpleFieldSet text header (LibraryBuffer.java:192-203):
     key=value lines terminated by 'End'."""
     lines = [
-        f"index.title={index_title}",
-        f"index.owner.name={index_owner}",
+        f"index.title={title}",
+        f"index.owner.name={owner_name}",
         f"index.owner.email={owner_email}",
         f"totalPages={total_pages}",
         "End",

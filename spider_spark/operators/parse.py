@@ -75,17 +75,6 @@ def split_flagged(
     return normal, redirects, unsafe
 
 
-def split_redirects(matched: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(normal_docs, redirects) — kept for callers that do not gate on
-    content type (treats every type as safe)."""
-    flagged = flag_docs(matched, ()).drop("_unsafe")
-    redirects = (
-        flagged.filter("_redir")
-        .select("id", "url", F.col("spans")[0]["media_ref"].alias("target"))
-    )
-    return flagged.filter(~F.col("_redir")).drop("_redir"), redirects
-
-
 def exploded_spans(docs: DataFrame) -> DataFrame:
     """One row per span, offset order preserved via the offset column.
 

@@ -59,10 +59,3 @@ def build_postings(indexable: DataFrame, meta: DataFrame) -> DataFrame:
             ).alias("pos_fragments"),
         )
     )
-
-
-def emit_sorted(postings: DataFrame) -> DataFrame:
-    """E6 ordering for sink-format parity (TreeMap iteration order,
-    index/TermEntry.java:68-76: subj asc, rel desc, page asc)."""
-    return postings.orderBy(F.col("term").asc(), F.col("rel").desc(),
-                            F.col("doc_id").asc())

@@ -25,6 +25,8 @@ from pyspark.sql import functions as F
 from ..config import CrawlConfig
 
 RANK_COLS = ["priority", "last_change", "id"]
+# (host, salt) sub-partitions per host on the salted ranking path
+NUM_SALTS = 4
 
 
 def eligible_per_host(
@@ -47,7 +49,7 @@ def eligible_per_host(
     order = [F.col(c).asc() for c in RANK_COLS]
     if salted:
         df = df.withColumn(
-            "_salt", F.pmod(F.xxhash64("url"), F.lit(config.num_salts))
+            "_salt", F.pmod(F.xxhash64("url"), F.lit(NUM_SALTS))
         )
         w1 = Window.partitionBy("host", "_salt").orderBy(*order)
         df = (

@@ -44,7 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.filters import BloomFilter, CuckooFilter
+from ..functions.filters import BITS_PER_KEY, BloomFilter, CuckooFilter
 
 BLOOM_SCHEMA = "bkt int, n long, m long, k int, overflow boolean, bits binary"
 CUCKOO_SCHEMA = "bkt int, n long, nb long, kick long, overflow boolean, table binary"
@@ -62,7 +62,7 @@ def _hash_pair(df: DataFrame, url_col: str = "url") -> list:
     ]
 
 
-def build_bucket_blooms(urls: DataFrame, nb: int, bits_per_key: int) -> DataFrame:
+def build_bucket_blooms(urls: DataFrame, nb: int) -> DataFrame:
     """(url) rows → one (bkt, n, m, k, bits) filter row per populated
     bucket, each built inside a single task.  Sized for the bucket's
     observed count with 4x headroom (growth between rebuilds is folded
@@ -74,7 +74,7 @@ def build_bucket_blooms(urls: DataFrame, nb: int, bits_per_key: int) -> DataFram
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
         n = len(pdf)
-        bf = BloomFilter(max(1024, 4 * n), bits_per_key)
+        bf = BloomFilter(max(1024, 4 * n))
         bf.add_hash_arrays(
             pdf["_h1"].to_numpy().view(np.uint64),
             pdf["_h2"].to_numpy().view(np.uint64),
@@ -89,7 +89,7 @@ def build_bucket_blooms(urls: DataFrame, nb: int, bits_per_key: int) -> DataFram
 
 
 def update_bucket_blooms(new_urls: DataFrame, bloom_df: DataFrame,
-                         nb: int, bits_per_key: int) -> DataFrame:
+                         nb: int) -> DataFrame:
     """Fold a round's NEW urls into the existing per-bucket filters —
     O(n_new) per round, not O(bucket rows).  URLs are never deleted
     from the seen set, so incremental OR is exact; a bucket whose key
@@ -109,7 +109,7 @@ def update_bucket_blooms(new_urls: DataFrame, bloom_df: DataFrame,
         h1 = left_pdf["_h1"].to_numpy().view(np.uint64)
         h2 = left_pdf["_h2"].to_numpy().view(np.uint64)
         if len(right_pdf) == 0:
-            bf = BloomFilter(max(1024, 4 * len(left_pdf)), bits_per_key)
+            bf = BloomFilter(max(1024, 4 * len(left_pdf)))
             bf.add_hash_arrays(h1, h2)
             n, overflow = len(left_pdf), False
         else:
@@ -117,7 +117,7 @@ def update_bucket_blooms(new_urls: DataFrame, bloom_df: DataFrame,
             n = int(r["n"]) + len(left_pdf)
             bf = BloomFilter.__new__(BloomFilter)
             bf.m, bf.k = int(r["m"]), int(r["k"])
-            if n * bits_per_key > bf.m:
+            if n * BITS_PER_KEY > bf.m:
                 # capacity exceeded: signal rebuild, keep old bits
                 return pd.DataFrame({
                     "bkt": [bkt], "n": [int(r["n"])], "m": [bf.m],

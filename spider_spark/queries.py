@@ -42,7 +42,7 @@ def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-_SCAN_PARALLELISM_CACHE: dict[str, int] = {}
+_SCAN_PARALLELISM_CACHE: dict[tuple[str, int], int] = {}
 
 
 def _scan_parallelism(path: str) -> int:
@@ -51,32 +51,40 @@ def _scan_parallelism(path: str) -> int:
     Parquet row groups cannot be split, so a single-row-group file is a
     one-task scan no matter how `spark.sql.files.maxPartitionBytes` is
     set — the guide §2.5 "one huge unsplittable file" input-skew case.
-    Footer metadata only (no data read); the directory walk stops as
-    soon as the input is provably parallel enough.  Cached per path —
-    this is input-layout metadata, not query results."""
-    cached = _SCAN_PARALLELISM_CACHE.get(path)
-    if cached is not None:
-        return cached
+    Footer metadata only (no data read); the walk reads at most 64
+    data files (hidden, ``_SUCCESS`` and checksum files are skipped and
+    not counted) and stops as soon as the input is provably parallel
+    enough.  Cached per (path, mtime) — input-layout metadata, not
+    query results, and a rewrite of the path invalidates it."""
     import os
 
     import pyarrow.parquet as _pq
 
-    cap = 4096
+    cap = 4096  # unknown layout: assume parallel, never force a shuffle
+    try:
+        key = (path, os.stat(path).st_mtime_ns)
+    except OSError:
+        return cap
+    cached = _SCAN_PARALLELISM_CACHE.get(key)
+    if cached is not None:
+        return cached
     try:
         if os.path.isdir(path):
+            files = sorted(f for f in os.listdir(path)
+                           if f.endswith(".parquet")
+                           and not f.startswith((".", "_")))
             total = 0
-            for i, f in enumerate(sorted(os.listdir(path))):
-                if f.endswith(".parquet"):
-                    total += _pq.ParquetFile(
-                        os.path.join(path, f)).metadata.num_row_groups
-                if total >= 64 or i >= 64:
+            for f in files[:64]:
+                total += _pq.ParquetFile(
+                    os.path.join(path, f)).metadata.num_row_groups
+                if total >= 64:
                     break
             n = max(total, 1)
         else:
             n = max(_pq.ParquetFile(path).metadata.num_row_groups, 1)
     except Exception:
-        n = cap  # unknown layout: assume parallel, never force a shuffle
-    _SCAN_PARALLELISM_CACHE[path] = n
+        n = cap
+    _SCAN_PARALLELISM_CACHE[key] = n
     return n
 
 

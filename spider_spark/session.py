@@ -31,9 +31,8 @@ def get_spark(
         # Arrow tokenize hop) pin their partitioning explicitly
         # (parse.exploded_spans) and are not affected.
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-                os.environ.get("SPIDER_AQE_PARALLELISM_FIRST", "false"))
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-                os.environ.get("SPIDER_AQE_ADVISORY_BYTES", "8m"))
+                "false")
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Unix-domain sockets for the executor<->Python-worker Arrow
@@ -42,8 +41,7 @@ def get_spark(
         # guest-kernel pathology where the TCP path intermittently
         # degrades ~10x under Spark concurrency (high sys%, idle cores,
         # zero steal — see BENCH.md forensics)
-        .config("spark.python.unix.domain.socket.enabled",
-                os.environ.get("SPIDER_UDS", "true"))
+        .config("spark.python.unix.domain.socket.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .getOrCreate()

@@ -647,10 +647,8 @@ class SnapshotStore:
         except FileNotFoundError:
             pass
 
-    def compact_appends(
-        self, spark: SparkSession, table: str, min_segments: int = 2,
-        target_partitions: int | None = None,
-    ) -> bool:
+    def compact_appends(self, spark: SparkSession, table: str,
+                        min_segments: int = 2) -> bool:
         """Merge ALL of an append table's segments into one rollup dir
         and atomically re-point the catalog (LibraryBuffer.java:160-188
         flush/merge analog; Iceberg rewrite_data_files).  Bounded read
@@ -668,8 +666,6 @@ class SnapshotStore:
         # — silent, permanent loss once gc prunes the originals
         df = self._reader(spark, cat, table).parquet(
             *[os.path.join(self.root, s) for s in segs])
-        if target_partitions:
-            df = df.coalesce(target_partitions)
         rel = f"{table}/rollup-{cat['round']:06d}-{len(segs)}"
         df.write.mode("overwrite").parquet(os.path.join(self.root, rel))
         # single-writer store (one driver owns the catalog, like one

@@ -1,61 +1,68 @@
-"""Bloom/cuckoo filter unit tests (SURVEY.md §2 B4/B5 prefilters)."""
+"""Bloom/cuckoo filter unit tests (SURVEY.md §2 B4/B5 prefilters), on
+the hash-pair API the engine runs: keys enter as two 64-bit hashes."""
 
 import numpy as np
-import pytest
 
+from spider_spark.analytics.text import _xxh64
 from spider_spark.functions.filters import BloomFilter, CuckooFilter
+
+
+def _pairs(keys):
+    """Two 64-bit hashes per key as uint64 arrays.  The engine takes
+    them from JVM ``xxhash64``; the driver-side XXH64 twin stands in."""
+    keys = list(keys)
+    h1 = np.array([_xxh64(k.encode(), seed=42) for k in keys], dtype=np.uint64)
+    h2 = np.array([_xxh64(k.encode(), seed=1) for k in keys], dtype=np.uint64)
+    return h1, h2
 
 
 def test_bloom_no_false_negatives():
     bf = BloomFilter(1000)
-    keys = [f"http://h{i}.example/d/{i}" for i in range(1000)]
-    bf.add_many(keys)
-    assert all(k in bf for k in keys)
+    h1, h2 = _pairs(f"http://h{i}.example/d/{i}" for i in range(1000))
+    bf.add_hash_arrays(h1, h2)
+    assert bf.contains_hash_arrays(h1, h2).all()
 
 
 def test_bloom_fpr_bounded():
-    bf = BloomFilter(2000, bits_per_key=10)
-    bf.add_many(f"key-{i}" for i in range(2000))
-    fp = sum(f"other-{i}" in bf for i in range(10000))
-    assert fp / 10000 < 0.05  # ~1% expected at 10 bits/key
-
-
-def test_bloom_series_probe():
-    import pandas as pd
-
-    bf = BloomFilter(100)
-    bf.add("a")
-    out = bf.contains_series(pd.Series(["a", "b", None]))
-    assert out.tolist()[0] is True or out.tolist()[0] == True  # noqa: E712
-    assert out.tolist()[2] == False  # noqa: E712
+    bf = BloomFilter(2000)  # 10 bits/key
+    bf.add_hash_arrays(*_pairs(f"key-{i}" for i in range(2000)))
+    fp = bf.contains_hash_arrays(*_pairs(f"other-{i}" for i in range(10000)))
+    assert fp.sum() / 10000 < 0.05  # ~1% expected at 10 bits/key
 
 
 def test_bloom_deterministic_across_instances():
     a, b = BloomFilter(100), BloomFilter(100)
-    for k in ("x", "y", "z"):
-        a.add(k)
-        b.add(k)
+    h1, h2 = _pairs(("x", "y", "z"))
+    a.add_hash_arrays(h1, h2)
+    b.add_hash_arrays(h1, h2)
     assert np.array_equal(a.bits, b.bits)
+
+
+def _fp_buckets(cf, h1, h2):
+    fp, i1, i2 = CuckooFilter.fp_buckets_arrays(h1, h2, cf.num_buckets)
+    return [(int(f), int(a), int(b)) for f, a, b in zip(fp, i1, i2)]
 
 
 def test_cuckoo_insert_delete_contains():
     cf = CuckooFilter(1000)
-    keys = [f"url-{i}" for i in range(800)]
-    for k in keys:
-        assert cf.add(k)
-    assert all(k in cf for k in keys)
+    h1, h2 = _pairs(f"url-{i}" for i in range(800))
+    keys = _fp_buckets(cf, h1, h2)
+    for key in keys:
+        assert cf.add_fp(*key)
+    assert cf.contains_arrays(h1, h2).all()
     # deletion — the capability Bloom lacks (force-requeue B5)
-    for k in keys[:100]:
-        assert cf.delete(k)
-    misses = sum(k in cf for k in keys[:100])
+    for key in keys[:100]:
+        assert cf.delete_fp(*key)
+    misses = int(cf.contains_arrays(h1[:100], h2[:100]).sum())
     # fingerprint collisions may leave a few phantom hits, never many
     assert misses < 10
-    assert all(k in cf for k in keys[100:])
+    assert cf.contains_arrays(h1[100:], h2[100:]).all()
 
 
 def test_cuckoo_full_table_reports_failure():
     cf = CuckooFilter(16)
-    ok = sum(cf.add(f"k{i}") for i in range(200))
+    keys = _fp_buckets(cf, *_pairs(f"k{i}" for i in range(200)))
+    ok = sum(cf.add_fp(*key) for key in keys)
     assert ok < 200  # must signal saturation, not silently drop
 
 
@@ -65,7 +72,7 @@ def test_bloom_hash_array_api_no_false_negatives():
     rng = np.random.default_rng(7)
     h1 = rng.integers(0, 2**63, size=5000, dtype=np.int64).view(np.uint64)
     h2 = rng.integers(0, 2**63, size=5000, dtype=np.int64).view(np.uint64)
-    bf = BloomFilter(5000, bits_per_key=10)
+    bf = BloomFilter(5000)
     bf.add_hash_arrays(h1, h2)
     assert bf.contains_hash_arrays(h1, h2).all()
     o1 = rng.integers(0, 2**63, size=20000, dtype=np.int64).view(np.uint64)

@@ -39,7 +39,7 @@ def test_exclude_skips_running(spark):
 
 def test_salted_matches_unsalted(spark):
     q = _queued(spark, n=60)
-    cfg = CrawlConfig(default_host_quota=3, num_salts=4)
+    cfg = CrawlConfig(default_host_quota=3)
     a = scheduling.select_batch(q, None, cfg, budget=10, salted=True)
     b = scheduling.select_batch(q, None, cfg, budget=10, salted=False)
     assert [tuple(r) for r in a.orderBy("rank").collect()] == \

@@ -182,6 +182,33 @@ def test_cuckoo_delete_then_readmit(spark, corpus_dir, corpus,
     assert target in done_urls()  # re-added on completion
 
 
+def test_plain_enqueue_leaves_done_table(spark, corpus_dir, corpus,
+                                         filter_config, tmp_path):
+    """A force=False enqueue runs none of the force-requeue path: with
+    the cuckoo done table live it commits no done update at all, and an
+    already-fetched URL it names stays fetched."""
+    eng = _mk_engine(spark, corpus_dir, filter_config, str(tmp_path / "nf"))
+    eng.bootstrap(corpus["seeds"])
+    eng.run(1)
+    cat = eng.store.read_catalog()
+    done_dirs = cat["buckets"]["done"]["dirs"]
+    assert done_dirs
+    fetched = sorted(r.url for r in eng.frontier()
+                     .filter(F.col("status") != "QUEUED").select("url")
+                     .collect())[0]
+    n = eng.enqueue([fetched, "http://host0.example/never-linked-page"],
+                    force=False)
+    assert n == 1
+    after = eng.store.read_catalog()
+    rnd = after["round"]
+    assert rnd == cat["round"] + 1
+    assert after["buckets"]["done"]["dirs"] == done_dirs
+    assert not os.path.exists(
+        os.path.join(eng.store.root, f"done/snap-{rnd:06d}"))
+    row = eng.frontier().filter(F.col("url") == fetched).first()
+    assert row["status"] != "QUEUED"
+
+
 def test_resume_with_filters(spark, corpus_dir, corpus, filter_config,
                              tmp_path):
     """Kill/resume with the filter tables active stays bit-identical."""
