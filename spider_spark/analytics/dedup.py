@@ -852,6 +852,11 @@ def semdedup(
     point per duplicate group; min-id makes the choice reproducible and
     SQL-checkable).
 
+    Input contract: ``cluster_col`` may be any equality-comparable type
+    (int or string labels alike); ``id_col`` is an integer; rows whose
+    cluster, id or vector is NULL take no part, as in the SQL twin's
+    inner self-join.
+
     Scale shape: the pairwise pass is confined to cluster blocks —
     cogrouped on ``cluster_col`` (pre-assigned by IVF/k-means upstream,
     here the embedding table's cluster column), so candidate volume is
@@ -882,20 +887,25 @@ def semdedup(
     ``dot / greatest(na * nb, 1e-12)`` operation for operation.
     """
     tau = float(tau)
+    # the SQL twin's inner self-join on the cluster never pairs a row
+    # whose cluster, id or vector is NULL: drop those before the hop
+    embeddings = embeddings.dropna(subset=[cluster_col, id_col, vec_col])
     # cast float->double BEFORE the hop, like cosine_expr's cast (exact
     # widening), so Python sees the same float64 inputs the JVM fold saw
-    # NOTE: both grouping key columns are cast to long explicitly —
-    # cogroup matches groups by binary row equality, so an int salt on
-    # one side and a long salt on the other silently mis-align blocks
+    # NOTE: the cluster key keeps its own type (a cast could turn labels
+    # into NULL and merge their blocks), identical on both sides; the
+    # salt is long on both sides — cogroup matches groups by binary row
+    # equality, so an int salt on one side and a long salt on the other
+    # silently mis-align blocks
     left = embeddings.select(
-        F.col(cluster_col).cast("long").alias("_cl"),
+        F.col(cluster_col).alias("_cl"),
         F.col(id_col).alias("_x"),
         F.col(vec_col).cast("array<double>").alias("_vx"),
         F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_salts)).cast("long")
         .alias("_salt"),
     )
     right = embeddings.select(
-        F.col(cluster_col).cast("long").alias("_cl"),
+        F.col(cluster_col).alias("_cl"),
         F.col(id_col).alias("_y"),
         F.col(vec_col).cast("array<double>").alias("_vy"),
         F.explode(

@@ -114,12 +114,12 @@ class CrawlEngine:
     #
     # The per-bucket Bloom (url-seen) and cuckoo (done := non-QUEUED,
     # deletion-capable) tables live in the snapshot store and swap
-    # atomically with the frontier.  A bucket's Bloom is REBUILT from
-    # that bucket's merged rows whenever the bucket gains new URLs —
-    # those rows are already shuffled for the frontier rewrite, the
-    # sizing self-adjusts, and no driver ever holds a bitmap.  The
-    # cuckoo side updates incrementally (adds on fetch-completion,
-    # deletes on force-requeue) with an overflow→rebuild fallback.
+    # atomically with the frontier.  Both are maintained the same way:
+    # built once from the whole frontier when the filter path activates,
+    # then updated incrementally (Bloom: a round's new URLs ORed in;
+    # cuckoo: adds on fetch-completion, deletes on force-requeue).  A
+    # bucket whose update passes its sized capacity is rebuilt from
+    # that bucket's merged rows, so no driver ever holds a bitmap.
 
     def _filters_state(self, cat: dict, next_id: int) -> dict:
         buckets = cat.get("buckets", {})
@@ -132,6 +132,24 @@ class CrawlEngine:
             "bloom_maintain": has_bloom or scale,
             "cuckoo_maintain": has_done or (self.config.use_cuckoo and scale),
         }
+
+    def _filter_tables(self, fs: dict) -> tuple:
+        """The committed ``(bloom, done)`` tables, None where absent."""
+        return tuple(self.store.read(self.spark, t) if fs[f"has_{t}"]
+                     else None for t in ("bloom", "done"))
+
+    def _whole_frontier(self, merged: DataFrame,
+                        touched: list[int]) -> DataFrame:
+        """``(url, status)`` of the whole frontier: a commit's
+        ``merged`` buckets ∪ the committed buckets it did not touch."""
+        rows = merged.select("url", "status")
+        skip = set(touched)
+        rest_ids = [bk for bk in self.store.populated_buckets("frontier")
+                    if bk not in skip]
+        rest = (self.store.read_buckets(self.spark, "frontier", rest_ids)
+                if rest_ids else None)
+        return (rows if rest is None else
+                rows.unionByName(rest.select("url", "status")))
 
     def _filter_updates(
         self,
@@ -157,79 +175,43 @@ class CrawlEngine:
         so this method can run on a side thread concurrent with that
         materialization without racing on the unmaterialized cache.
         The common incremental path (no overflow) never blocks on it."""
-        b = self._bucket_expr(nb)
+        wait = barrier or (lambda: None)
+        done = F.col("status") != "QUEUED"
+        new_urls = (new_rows.select("url")
+                    if new_bks and new_rows is not None else None)
         out: dict[str, tuple[DataFrame, int]] = {}
-        need_full = (
-            (fs["bloom_maintain"] and bloom_df is None)
-            or (fs["cuckoo_maintain"] and done_df is None)
-        )
         full_rows = None
-        if need_full:
-            if barrier is not None:
-                barrier()
-            # one-time activation: the full URL set = this commit's
-            # merged buckets ∪ the untouched buckets
-            full_rows = frontier_final.select("url", "status")
-            rest_ids = [bk for bk in self.store.populated_buckets("frontier")
-                        if bk not in set(touched)]
-            rest = (self.store.read_buckets(self.spark, "frontier", rest_ids)
-                    if rest_ids else None)
-            if rest is not None:
-                full_rows = full_rows.unionByName(rest.select("url", "status"))
-
-        if fs["bloom_maintain"]:
-            if bloom_df is None:
-                out["bloom"] = (
-                    seenfilter.build_bucket_blooms(full_rows.select("url"), nb)
-                    .withColumn("bucket", F.col("bkt")),
-                    nb,
-                )
-            elif new_bks and new_rows is not None:
-                # incremental: OR only the NEW urls into their buckets'
-                # filters — O(n_new), never O(bucket rows).  A bucket
+        for table, maintain, current, changes, member, build, update in (
+            ("bloom", fs["bloom_maintain"], bloom_df, new_urls, F.lit(True),
+             seenfilter.build_bucket_blooms, seenfilter.update_bucket_blooms),
+            ("done", fs["cuckoo_maintain"], done_df, cuckoo_changes, done,
+             seenfilter.build_bucket_cuckoos, seenfilter.update_bucket_cuckoos),
+        ):
+            if not maintain or (current is not None and changes is None):
+                continue
+            if current is None:
+                # one-time activation: built from the whole frontier
+                if full_rows is None:
+                    wait()
+                    full_rows = self._whole_frontier(frontier_final, touched)
+                rows = build(full_rows.filter(member).select("url"), nb)
+            else:
+                # incremental: only this commit's changes touch the
+                # filters — O(changes), never O(bucket rows).  A bucket
                 # over its sized capacity rebuilds from its merged
                 # frontier rows (rare; one tiny flag collect)
-                upd = seenfilter.update_bucket_blooms(
-                    new_rows.select("url"), bloom_df, nb).cache()
-                cleanup.append(upd)
+                rows = update(changes, current, nb).cache()
+                cleanup.append(rows)
                 over = [r["bkt"] for r in
-                        upd.filter("overflow").select("bkt").collect()]
+                        rows.filter("overflow").select("bkt").collect()]
                 if over:
-                    if barrier is not None:
-                        barrier()
-                    rebuilt = seenfilter.build_bucket_blooms(
-                        frontier_final.filter(b.isin(over)).select("url"), nb)
-                    upd = upd.filter(~F.col("bkt").isin(over)) \
-                             .unionByName(rebuilt)
-                out["bloom"] = (upd.withColumn("bucket", F.col("bkt")), nb)
-
-        if fs["cuckoo_maintain"]:
-            if done_df is None:
-                done_src = full_rows.filter(
-                    F.col("status") != "QUEUED").select("url")
-                out["done"] = (
-                    seenfilter.build_bucket_cuckoos(done_src, nb)
-                    .withColumn("bucket", F.col("bkt")),
-                    nb,
-                )
-            elif cuckoo_changes is not None:
-                upd = seenfilter.update_bucket_cuckoos(
-                    cuckoo_changes, done_df, nb).cache()
-                cleanup.append(upd)
-                over = [r["bkt"] for r in
-                        upd.filter("overflow").select("bkt").collect()]
-                if over:
-                    if barrier is not None:
-                        barrier()
-                    rebuilt = seenfilter.build_bucket_cuckoos(
-                        frontier_final.filter(
-                            b.isin(over) & (F.col("status") != "QUEUED")
-                        ).select("url"),
-                        nb,
-                    )
-                    upd = upd.filter(~F.col("bkt").isin(over)) \
-                             .unionByName(rebuilt)
-                out["done"] = (upd.withColumn("bucket", F.col("bkt")), nb)
+                    wait()
+                    rebuilt = build(frontier_final.filter(
+                        self._bucket_expr(nb).isin(over) & member
+                    ).select("url"), nb)
+                    rows = rows.filter(~F.col("bkt").isin(over)) \
+                               .unionByName(rebuilt)
+            out[table] = (rows.withColumn("bucket", F.col("bkt")), nb)
         return out
 
     def _maybe_compact(self) -> None:
@@ -288,22 +270,14 @@ class CrawlEngine:
         bucket_updates = {"frontier": (final, new_nb)}
         fs = self._filters_state(cat, next_id)
         # per-bucket filters are keyed by pmod(hash, nb) — a new
-        # modulus invalidates every row, so rebuild from the re-read
-        # frontier rather than carrying anything over
-        if fs["has_bloom"]:
-            bucket_updates["bloom"] = (
-                seenfilter.build_bucket_blooms(final.select("url"), new_nb)
-                .withColumn("bucket", F.col("bkt")),
-                new_nb,
-            )
-        if fs["has_done"]:
-            bucket_updates["done"] = (
-                seenfilter.build_bucket_cuckoos(
-                    final.filter(F.col("status") != "QUEUED").select("url"),
-                    new_nb)
-                .withColumn("bucket", F.col("bkt")),
-                new_nb,
-            )
+        # modulus invalidates every row, so each existing filter table
+        # is rebuilt in full from the re-read frontier (every old
+        # bucket counts as touched: nothing is left to read beside it)
+        bucket_updates.update(self._filter_updates(
+            {"bloom_maintain": fs["has_bloom"],
+             "cuckoo_maintain": fs["has_done"]},
+            None, None, final, new_nb,
+            self.store.populated_buckets("frontier"), [], None, []))
         self.store.commit_round(
             rnd + 1, rewrites={}, appends={},
             bucket_updates=bucket_updates,
@@ -343,10 +317,7 @@ class CrawlEngine:
         next_id = cat["lineage"][-1]["metrics"]["next_id"] if cat["lineage"] else 0
         nb = self._n_buckets()
         fs = self._filters_state(cat, next_id)
-        bloom_df = (self.store.read(self.spark, "bloom")
-                    if fs["has_bloom"] else None)
-        done_df = (self.store.read(self.spark, "done")
-                   if fs["has_done"] else None)
+        bloom_df, done_df = self._filter_tables(fs)
         # the enqueue commit IS its own round (rnd+1), so its sequence
         # space starts fresh — no overlap with crawl-round sequences.
         # The confirm join reads ONLY the buckets holding maybe-seen
@@ -699,10 +670,7 @@ class CrawlEngine:
         # join once the filter tables exist; plain anti-join below the
         # activation threshold (tiny frontiers need no prefilter)
         fs = self._filters_state(cat, next_id)
-        bloom_df = (self.store.read(self.spark, "bloom")
-                    if fs["has_bloom"] else None)
-        done_df = (self.store.read(self.spark, "done")
-                   if fs["has_done"] else None)
+        bloom_df, done_df = self._filter_tables(fs)
         reader = None
         frontier_arg = None
         if bloom_df is not None:

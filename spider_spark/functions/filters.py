@@ -6,20 +6,21 @@ prefilter ahead of the exact anti-join, with a **cuckoo filter** fallback
 where force-requeue (Spider.java:185-188) semantically deletes from the
 "currently queued-or-done" set.
 
-Both filters are *prefilters only*: every admission is confirmed by an
-exact anti-join against the ``seen`` table, so false positives cannot
-corrupt the seen set (SURVEY.md §7.3).  The filter state is a plain
-numpy array — cheap to broadcast to executors and probe inside an
-Arrow-batched pandas UDF.
+Both filters are *prefilters only*: a maybe-seen admission is confirmed
+by an exact anti-join against the frontier buckets it falls in, so
+false positives cannot corrupt the seen set (SURVEY.md §7.3).  Each
+frontier bucket keeps one filter of each kind as a row of a bucketed
+snapshot table (operators/seenfilter.py); ``from_row`` / ``row`` are
+the one place that row format is decoded and encoded.
 
 Hashing: keys arrive as two 64-bit hashes computed JVM-side
 (``xxhash64(url)`` / ``xxhash64(url, 1)``), and both filters work on
-whole numpy arrays of them — Bloom ``add_hash_arrays`` /
-``contains_hash_arrays``, cuckoo ``fp_buckets_arrays`` / ``add_fp`` /
-``delete_fp`` / ``contains_arrays`` — so the only per-key Python left
-is the cuckoo kick loop, which is inherently sequential.  The hashes
-are deterministic across processes (unlike Python's salted ``hash()``),
-which the bit-identical-resume requirement needs.
+whole numpy arrays of them — ``add_hash_arrays`` /
+``contains_hash_arrays`` on both, plus cuckoo ``delete_hash_arrays`` —
+so the only per-key Python left is the cuckoo kick loop, which is
+inherently sequential.  The hashes are deterministic across processes
+(unlike Python's salted ``hash()``), which the bit-identical-resume
+requirement needs.
 """
 
 from __future__ import annotations
@@ -34,12 +35,28 @@ BITS_PER_KEY = 10
 
 class BloomFilter:
     """Classic Bloom filter over 64-bit hash pairs (Kirsch–Mitzenmacher
-    double hashing).  Serializable as (bits, num_hashes) for broadcast."""
+    double hashing).  Stored as a ``(bkt, n, m, k, overflow, bits)``
+    filter row."""
 
     def __init__(self, capacity: int):
         self.m = max(64, capacity * BITS_PER_KEY)
         self.k = max(1, int(round(BITS_PER_KEY * 0.6931)))
         self.bits = np.zeros((self.m + 63) // 64, dtype=np.uint64)
+
+    @classmethod
+    def from_row(cls, row, writable: bool = False) -> "BloomFilter":
+        """The filter a stored row holds.  Without ``writable`` the bits
+        are a read-only view of the row's buffer (enough to probe)."""
+        bf = cls.__new__(cls)
+        bf.m, bf.k = int(row["m"]), int(row["k"])
+        bits = np.frombuffer(row["bits"], dtype=np.uint64)
+        bf.bits = bits.copy() if writable else bits
+        return bf
+
+    def row(self, bkt: int, n: int, overflow: bool = False) -> dict:
+        """The stored row for bucket ``bkt`` holding ``n`` keys."""
+        return {"bkt": bkt, "n": n, "m": self.m, "k": self.k,
+                "overflow": overflow, "bits": self.bits.tobytes()}
 
     def add_hash_arrays(self, h1: np.ndarray, h2: np.ndarray) -> None:
         """Set bits for a batch of pre-hashed keys.  h1/h2 are uint64
@@ -77,7 +94,8 @@ class CuckooFilter:
     """Cuckoo filter (Fan et al., CoNEXT'14 — public algorithm):
     4-slot buckets, 16-bit fingerprints, partial-key cuckoo hashing.
     Supports DELETE, which Bloom cannot — needed because force-requeue
-    (SURVEY.md §2 B5) removes entries from the "queued-or-done" view."""
+    (SURVEY.md §2 B5) removes entries from the "queued-or-done" view.
+    Stored as a ``(bkt, n, nb, kick, overflow, table)`` filter row."""
 
     SLOTS = 4
     MAX_KICKS = 500
@@ -90,6 +108,23 @@ class CuckooFilter:
         self.table = np.zeros((nb, self.SLOTS), dtype=np.uint16)
         # deterministic "random" eviction slot counter
         self._kick_seq = 0
+
+    @classmethod
+    def from_row(cls, row, writable: bool = False) -> "CuckooFilter":
+        """The filter a stored row holds.  Without ``writable`` the table
+        is a read-only view of the row's buffer (enough to probe)."""
+        cf = cls.__new__(cls)
+        cf.num_buckets, cf._kick_seq = int(row["nb"]), int(row["kick"])
+        table = np.frombuffer(row["table"], dtype=np.uint16) \
+            .reshape(-1, cls.SLOTS)
+        cf.table = table.copy() if writable else table
+        return cf
+
+    def row(self, bkt: int, n: int, overflow: bool = False) -> dict:
+        """The stored row for bucket ``bkt`` holding ``n`` keys."""
+        return {"bkt": bkt, "n": n, "nb": self.num_buckets,
+                "kick": self._kick_seq, "overflow": overflow,
+                "table": self.table.tobytes()}
 
     @staticmethod
     def fp_buckets_arrays(h1: np.ndarray, h2: np.ndarray, nb: int):
@@ -122,6 +157,23 @@ class CuckooFilter:
                 return True
         return False
 
+    def add_hash_arrays(self, h1: np.ndarray, h2: np.ndarray) -> bool:
+        """Insert xxhash64-pair keys in array order (the order fixes the
+        table bytes).  False = some key did not fit: the table is over
+        capacity and must be rebuilt larger."""
+        fp, i1, i2 = self.fp_buckets_arrays(h1, h2, self.num_buckets)
+        ok = True
+        for j in range(len(fp)):
+            ok &= self.add_fp(int(fp[j]), int(i1[j]), int(i2[j]))
+        return ok
+
+    def delete_hash_arrays(self, h1: np.ndarray, h2: np.ndarray) -> int:
+        """Delete xxhash64-pair keys in array order; returns how many
+        were found (and removed)."""
+        fp, i1, i2 = self.fp_buckets_arrays(h1, h2, self.num_buckets)
+        return sum(self.delete_fp(int(fp[j]), int(i1[j]), int(i2[j]))
+                   for j in range(len(fp)))
+
     def delete_fp(self, fp: int, i1: int, i2: int) -> bool:
         for i in (i1, i2):
             row = self.table[i]
@@ -131,7 +183,7 @@ class CuckooFilter:
                     return True
         return False
 
-    def contains_arrays(self, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
+    def contains_hash_arrays(self, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
         """Whole-array membership probe for xxhash64-pair keys."""
         fp, i1, i2 = self.fp_buckets_arrays(h1, h2, self.num_buckets)
         fpc = fp[:, None].astype(self.table.dtype)

@@ -890,23 +890,34 @@ def test_resize_images_operator(spark):
         assert (r.height, r.width) == (8, 8)
 
 
-def test_semdedup_exemplar_resolution(spark):
+@pytest.mark.parametrize("label_type", ["int", "string"])
+def test_semdedup_exemplar_resolution(spark, label_type):
     """SemDeDup keep/drop semantics on a crafted frame: identical
     vectors in one cluster collapse to the min-id exemplar, the same
     vector in a DIFFERENT cluster is untouched (pairwise pass is
-    cluster-blocked), and a below-tau vector survives."""
+    cluster-blocked), and a below-tau vector survives — for int and
+    string cluster labels alike.  Rows with a NULL label or vector take
+    no part (the SQL twin's inner join drops them)."""
     from spider_spark.analytics import dedup as D
+    lab = int if label_type == "int" else str
     rows = [
         # cluster 0: three identical vectors -> 20 and 30 both dup_of 10
-        (10, [1.0, 0.0, 0.0], 0),
-        (20, [1.0, 0.0, 0.0], 0),
-        (30, [2.0, 0.0, 0.0], 0),   # same direction, scaled: cos = 1
+        (10, [1.0, 0.0, 0.0], lab(0)),
+        (20, [1.0, 0.0, 0.0], lab(0)),
+        (30, [2.0, 0.0, 0.0], lab(0)),   # same direction, scaled: cos = 1
         # cluster 0: orthogonal vector survives
-        (40, [0.0, 1.0, 0.0], 0),
+        (40, [0.0, 1.0, 0.0], lab(0)),
         # cluster 1: identical to 10 but different cluster -> kept
-        (50, [1.0, 0.0, 0.0], 1),
+        (50, [1.0, 0.0, 0.0], lab(1)),
+        # no cluster: identical to each other (and to 10, 50) but
+        # never paired — NULL is no cluster, not a shared one
+        (60, [1.0, 0.0, 0.0], None),
+        (65, [1.0, 0.0, 0.0], None),
+        # no vector: never paired
+        (70, None, lab(0)),
     ]
-    e = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
+    e = spark.createDataFrame(
+        rows, f"vec_id long, embedding array<float>, label {label_type}")
     out = {r["vec_id"]: r for r in D.semdedup(e, tau=0.9).collect()}
     assert set(out) == {20, 30}
     assert out[20]["dup_of"] == 10 and out[30]["dup_of"] == 10

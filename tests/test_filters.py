@@ -49,14 +49,14 @@ def test_cuckoo_insert_delete_contains():
     keys = _fp_buckets(cf, h1, h2)
     for key in keys:
         assert cf.add_fp(*key)
-    assert cf.contains_arrays(h1, h2).all()
+    assert cf.contains_hash_arrays(h1, h2).all()
     # deletion — the capability Bloom lacks (force-requeue B5)
     for key in keys[:100]:
         assert cf.delete_fp(*key)
-    misses = int(cf.contains_arrays(h1[:100], h2[:100]).sum())
+    misses = int(cf.contains_hash_arrays(h1[:100], h2[:100]).sum())
     # fingerprint collisions may leave a few phantom hits, never many
     assert misses < 10
-    assert cf.contains_arrays(h1[100:], h2[100:]).all()
+    assert cf.contains_hash_arrays(h1[100:], h2[100:]).all()
 
 
 def test_cuckoo_full_table_reports_failure():
@@ -89,3 +89,46 @@ def test_bloom_hash_array_negative_int64_wraps():
     bf = BloomFilter(64)
     bf.add_hash_arrays(h1, h2)
     assert bf.contains_hash_arrays(h1, h2).all()
+
+
+def test_cuckoo_hash_array_api():
+    """Whole-array insert/delete: the same table as key-by-key add_fp,
+    the delete count, and False once the table cannot take a key."""
+    h1, h2 = _pairs(f"url-{i}" for i in range(300))
+    a, b = CuckooFilter(1000), CuckooFilter(1000)
+    assert a.add_hash_arrays(h1, h2)
+    for key in _fp_buckets(b, h1, h2):
+        b.add_fp(*key)
+    assert np.array_equal(a.table, b.table) and a._kick_seq == b._kick_seq
+    assert a.contains_hash_arrays(h1, h2).all()
+    assert a.delete_hash_arrays(h1[:50], h2[:50]) == 50
+    assert a.delete_hash_arrays(h1[:50], h2[:50]) < 5  # only collisions
+    assert not CuckooFilter(16).add_hash_arrays(h1, h2)
+
+
+def test_filter_rows_round_trip():
+    """``row`` / ``from_row`` carry a filter through its stored row
+    unchanged; a read-only load probes, a writable one can grow."""
+    h1, h2 = _pairs(f"k{i}" for i in range(100))
+    bf = BloomFilter(100)
+    bf.add_hash_arrays(h1, h2)
+    row = bf.row(3, 100)
+    assert (row["bkt"], row["n"], row["overflow"]) == (3, 100, False)
+    ro = BloomFilter.from_row(row)
+    assert ro.contains_hash_arrays(h1, h2).all()
+    assert not ro.bits.flags.writeable
+    assert ro.row(3, 100) == row
+    rw = BloomFilter.from_row(row, writable=True)
+    rw.add_hash_arrays(*_pairs(["extra"]))
+    assert rw.row(3, 101)["bits"] != row["bits"]
+
+    cf = CuckooFilter(256)
+    assert cf.add_hash_arrays(h1, h2)
+    crow = cf.row(5, 100, overflow=True)
+    assert (crow["bkt"], crow["n"], crow["overflow"]) == (5, 100, True)
+    back = CuckooFilter.from_row(crow)
+    assert back.contains_hash_arrays(h1, h2).all()
+    assert back.row(5, 100, overflow=True) == crow
+    assert CuckooFilter.from_row(crow, writable=True).delete_hash_arrays(
+        h1[:1], h2[:1]) == 1
+    assert CuckooFilter.from_row(crow).table.tobytes() == crow["table"]

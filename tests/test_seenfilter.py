@@ -12,6 +12,8 @@
     of crashing (ADVICE r2)
 """
 
+import dataclasses
+import hashlib
 import os
 
 import pytest
@@ -36,8 +38,20 @@ def _mk_engine(spark, corpus_dir, cfg, root):
 def filter_config(crawl_config):
     """The crawl config with the filter path forced ON (filter tables
     normally engage only past filter_min_keys frontier rows)."""
-    import dataclasses
     return dataclasses.replace(crawl_config, filter_min_keys=0)
+
+
+def _filter_rows(eng):
+    """Every committed ``bloom`` and ``done`` row, bits included, as
+    sorted tuples per table."""
+    out = {}
+    for table, schema in (("bloom", seenfilter.BLOOM_SCHEMA),
+                          ("done", seenfilter.CUCKOO_SCHEMA)):
+        cols = [f.split()[0] for f in schema.split(", ")]
+        out[table] = sorted(
+            tuple(bytes(v) if isinstance(v, bytearray) else v for v in r)
+            for r in eng.store.read(eng.spark, table).select(*cols).collect())
+    return out
 
 
 # -- status-pruned layout -------------------------------------------------
@@ -227,6 +241,102 @@ def test_resume_with_filters(spark, corpus_dir, corpus, filter_config,
         return sorted(map(tuple, eng.frontier().toPandas().fillna(-1)
                           .values.tolist()))
     assert sig(a) == sig(b2)
+    assert _filter_rows(a) == _filter_rows(b2)
+
+
+# sha256 of repr(sorted rows) per filter table after the scenario in
+# test_filter_rows_pinned; any change to the filter build, update or
+# row format shows here as a changed digest
+FILTER_ROWS_SHA256 = {
+    "bloom": "10de8958acd5162a3a4d9a4ef3b8ac4d8e2e7d174c8669ad17cfea8ec1edd758",
+    "done": "b48b1cb0be37e11c8ecfb316b937e4b2d9a2b83a94b2ef733bf71f43bfd46dd1",
+}
+
+
+def test_filter_rows_pinned(spark, corpus_dir, corpus, filter_config,
+                            tmp_path):
+    """The Bloom and cuckoo table bytes after bootstrap, two rounds, a
+    force-requeue of two fetched pages and two more rounds."""
+    eng = _mk_engine(spark, corpus_dir, filter_config, str(tmp_path / "pin"))
+    eng.bootstrap(corpus["seeds"])
+    eng.run(2)
+    fetched = sorted(r.url for r in eng.frontier()
+                     .filter(F.col("status") != "QUEUED").select("url")
+                     .collect())[:2]
+    assert len(fetched) == 2
+    assert eng.enqueue(fetched, force=True) == 0
+    eng.run(2)
+    got = {t: hashlib.sha256(repr(rows).encode()).hexdigest()
+           for t, rows in _filter_rows(eng).items()}
+    assert got == FILTER_ROWS_SHA256
+
+
+@pytest.mark.parametrize("small_round_rows", [20_000, 0],
+                         ids=["one_task", "partitioned"])
+def test_overflow_rebuilds_touched_buckets(spark, corpus_dir, corpus,
+                                           filter_config, small_round_rows,
+                                           tmp_path):
+    """Shrink every committed filter row until any change overflows it
+    — a saturated 64-bit Bloom (all bits set, so still no false
+    negatives) and a full one-bucket cuckoo table — then crawl on: each
+    bucket that gains URLs or fetches pages is rebuilt from its merged
+    frontier rows, and the crawl matches an engine that was never
+    shrunk."""
+    cfg = dataclasses.replace(filter_config, frontier_buckets=2,
+                              small_round_rows=small_round_rows)
+    ref = _mk_engine(spark, corpus_dir, cfg, str(tmp_path / "ov_ref"))
+    eng = _mk_engine(spark, corpus_dir, cfg, str(tmp_path / "ov"))
+    for e in (ref, eng):
+        e.bootstrap(corpus["seeds"])
+        e.run(1)
+
+    store, nb = eng.store, cfg.frontier_buckets
+    cat = store.read_catalog()
+    bloom = store.read(spark, "bloom")
+    # with m=64 any bucket holding >= 7 keys is over capacity
+    assert bloom.filter("n < 7").count() == 0
+    bloom = bloom.select(
+        "bkt", "n", F.lit(64).cast("long").alias("m"), "k", "overflow",
+        F.unhex(F.lit("FF" * 8)).alias("bits"))
+    done = store.read(spark, "done").select(
+        "bkt", "n", F.lit(1).cast("long").alias("nb"), "kick", "overflow",
+        F.unhex(F.lit("0100" * 4)).alias("table"))
+    shrink_round = cat["round"] + 1
+    store.commit_round(
+        shrink_round, rewrites={}, appends={},
+        bucket_updates={t: (df.withColumn("bucket", F.col("bkt")), nb)
+                        for t, df in (("bloom", bloom), ("done", done))},
+        metrics={"next_id": cat["lineage"][-1]["metrics"]["next_id"],
+                 "fetched": 0, "admitted": 0})
+
+    bucket = seenfilter.bucket_of(F.col("url"), nb).alias("b")
+    before = {r.url for r in eng.frontier().select("url").collect()}
+    ref.run(2)
+    eng.run(2)
+
+    def sig(e):
+        return sorted(
+            (r["id"], r["url"], r["status"], r["title"], r["comment"])
+            for r in e.frontier().collect())
+    assert sig(ref) == sig(eng)
+
+    rows = eng.frontier().select("url", "status", bucket).collect()
+    gained = {r.b for r in rows if r.url not in before}
+    fetched = {r.b for r in eng.crawl_log()
+               .filter(F.col("round") > shrink_round).select(bucket)
+               .collect()}
+    assert gained and fetched
+    n_rows = {b: sum(r.b == b for r in rows) for b in range(nb)}
+    n_done = {b: sum(r.b == b and r.status != "QUEUED" for r in rows)
+              for b in range(nb)}
+    blooms = {r.bkt: r for r in store.read(spark, "bloom").collect()}
+    dones = {r.bkt: r for r in store.read(spark, "done").collect()}
+    for b in gained | fetched:
+        assert not blooms[b].overflow and blooms[b].n == n_rows[b]
+        assert not dones[b].overflow and dones[b].n == n_done[b]
+    # the overflowing rows were rebuilt at full size, not kept shrunk
+    assert all(blooms[b].m > 64 for b in gained)
+    assert all(dones[b].nb > 1 for b in fetched)
 
 
 # -- compaction -----------------------------------------------------------
